@@ -9,18 +9,22 @@ this module provides the same *semantics* over plain parquet:
   against the update keys, union the updates back in, rewrite.
 - Writes are atomic at directory granularity (write to a temp dir, swap) so a
   failed job never leaves a half-written table — the property Delta gets from
-  its transaction log.
+  its transaction log. A crash inside a swap leaves the pre-image beside the
+  table; the next write (or ``repair_swap()``) puts it back.
 
 Scale design (100 TB): a full-table rewrite per merge is wrong at scale. Two
 mitigations are built in:
 
 1. **Partitioned tables rewrite only touched partitions.** When the table is
    partitioned (e.g. silver by ``event_date``, per the reference's own
-   recommendation README.md:295) the merge computes the distinct partition
-   values present in the update set, anti-joins only those partitions, and
-   uses dynamic partition overwrite. A 2-hour late-data merge then touches a
-   handful of date partitions out of thousands — the same I/O profile as a
-   Delta MERGE with partition pruning.
+   recommendation README.md:295) one probe collects the partition values
+   present in the update set together with the partitions where an update
+   key already lives; no such key means the merge is insert-only and
+   appends. Otherwise only the touched partitions are anti-joined and
+   written once, partitioned, to a staging dir whose partition dirs are
+   then renamed into place. A 2-hour late-data merge touches a handful of
+   date partitions out of thousands — the same I/O profile as a Delta
+   MERGE with partition pruning.
 2. **Delta passthrough.** If delta-spark is importable the same API delegates
    to a real ``DeltaTable.merge`` (file-level rewrite + transaction log).
 
@@ -31,11 +35,12 @@ expects redeliveries.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 try:  # pragma: no cover - delta not bundled here
@@ -59,6 +64,30 @@ def _hive_partition_value(v) -> str:
     return "".join(
         f"%{ord(ch):02X}" if ch in _HIVE_ESCAPE_CHARS else ch for ch in str(v)
     )
+
+
+# Written into a partition commit's ``__old_*`` dir before its first rename
+# and deleted at its commit point: while it exists, the commit is undone.
+_COMMIT_MANIFEST = "_partitions.json"
+
+
+def _partition_dirs(root: str, depth: int) -> list[str]:
+    """Relative paths of the ``col=value`` dirs ``depth`` levels below
+    ``root`` — the partitions a partitioned Spark write produced."""
+    rels = [""]
+    for _ in range(depth):
+        rels = [
+            os.path.join(r, d)
+            for r in rels
+            for d in os.listdir(os.path.join(root, r))
+            if "=" in d and os.path.isdir(os.path.join(root, r, d))
+        ]
+    return rels
+
+
+def _move(src: str, dst: str) -> None:
+    os.makedirs(os.path.dirname(dst), exist_ok=True)
+    os.rename(src, dst)
 
 
 def sync_all_columns(
@@ -249,12 +278,19 @@ class ParquetTable:
         leaves the table path missing with the old dir holding the last
         committed state: roll back by renaming it into place (the staged
         tmp never committed, so rollback is the deterministic contract).
-        Uncommitted ``__tmp_*`` stages and ``__old_*`` leftovers from a
-        crash after the commit point are garbage — removed. Runs
-        automatically at the start of every plain-parquet ``overwrite``;
-        idempotent; single-writer assumption (readers racing a writer
-        should not call this). Returns
-        ``{restored, removed_old, removed_tmp}``."""
+        Uncommitted ``__tmp_*``/``__stage_*`` stages and ``__old_*``
+        leftovers from a crash after the commit point are garbage —
+        removed.
+
+        A partition commit (``_rewrite_partitions``) that crashed before
+        its commit point left its manifest in ``__old_*``: every partition
+        it moved aside is renamed back and every staged partition it moved
+        in is removed, so the table reads its pre-merge rows again.
+
+        Runs automatically at the start of every plain-parquet
+        ``overwrite``, ``merge`` and ``delete_keys``; idempotent;
+        single-writer assumption (readers racing a writer should not call
+        this). Returns ``{restored, removed_old, removed_tmp}``."""
         parent = os.path.dirname(self.path) or "."
         base = os.path.basename(self.path)
         stats = {"restored": None, "removed_old": [], "removed_tmp": []}
@@ -264,8 +300,29 @@ class ParquetTable:
             d for d in os.listdir(parent) if d.startswith(f"{base}__old_")
         ]
         tmps = [
-            d for d in os.listdir(parent) if d.startswith(f"{base}__tmp_")
+            d
+            for d in os.listdir(parent)
+            if d.startswith((f"{base}__tmp_", f"{base}__stage_"))
         ]
+        for d in olds:
+            old = os.path.join(parent, d)
+            manifest = os.path.join(old, _COMMIT_MANIFEST)
+            if not os.path.isfile(manifest):
+                continue
+            try:
+                with open(manifest) as f:
+                    parts = json.load(f)
+            except ValueError:  # torn manifest: no partition was moved yet
+                parts = {}
+            for rel, existed in parts.items():
+                aside = os.path.join(old, rel)
+                if existed and not os.path.isdir(aside):
+                    continue  # never moved aside: the live dir is the pre-image
+                shutil.rmtree(os.path.join(self.path, rel), ignore_errors=True)
+                if existed:
+                    _move(aside, os.path.join(self.path, rel))
+            os.remove(manifest)
+            stats["restored"] = d
         if olds and not os.path.exists(self.path):
             # Crash between the two renames: restore the most recent
             # pre-image (with repair-on-every-overwrite at most one old
@@ -328,14 +385,28 @@ class ParquetTable:
         """Upsert ``updates`` by ``keys`` (operators S6/S7/S9).
 
         Bootstrap if the table does not exist yet (the reference's
-        first-run-overwrite path, silver_orders.py:81-85). For partitioned
-        tables only the partitions present in ``updates`` are rewritten.
+        first-run-overwrite path, silver_orders.py:81-85). Otherwise the
+        update set is pinned with a lazy localCheckpoint: every branch
+        below reads it more than once (probe, then rewrite), and its
+        lineage — often scans, joins and an aggregate — then runs once.
 
-        ``probe_insert_only=False`` skips the insert-only fast-path probe
-        (one extra job per merge): callers whose update set overlaps the
-        target BY CONSTRUCTION — an incremental gold merge always
-        re-merges the max bucket, since its lookback starts 2h BEFORE it —
-        pay the probe on every call and can never win it.
+        Partitioned tables run ONE probe: the update set's partition values
+        plus the partitions where an update key already lives (a
+        column-pruned key semi-join). No such partition means no key
+        matches, and the merge appends. Otherwise only the touched
+        partitions are rewritten: one partitioned write to a staging dir,
+        then each partition dir is renamed into place
+        (``_rewrite_partitions``; a crash there is undone by the next
+        write, see ``repair_swap``).
+
+        Unpartitioned tables probe for an insert-only batch with a
+        ``limit(1)`` key semi-join and otherwise rewrite the table.
+        ``probe_insert_only=False`` skips that probe (one job per merge):
+        callers whose update set overlaps the target BY CONSTRUCTION — an
+        incremental gold merge always re-merges the max bucket, since its
+        lookback starts 2h BEFORE it — pay the probe on every call and can
+        never win it. Partitioned merges get the answer from their one
+        probe and ignore the flag.
 
         With ``capture_changes`` (Delta Change Data Feed parity), returns
         the change set of this merge — the update rows tagged
@@ -346,6 +417,7 @@ class ParquetTable:
         Downstream incrementals (a gold refresh, a replication sink)
         consume this instead of diffing snapshots.
         """
+        self.repair_swap()
         if not self.exists():
             self.overwrite(updates)
             if capture_changes:
@@ -353,6 +425,7 @@ class ParquetTable:
                     "_change_type", F.lit("insert")
                 ).localCheckpoint(eager=True)
             return None
+        updates = updates.localCheckpoint(eager=False)
         target: DataFrame | None = None
         if not self.use_delta:
             target = self.read(spark)
@@ -385,7 +458,11 @@ class ParquetTable:
                 )
                 .localCheckpoint(eager=True)
             )
-        if not self.use_delta and probe_insert_only:
+        if (
+            not self.use_delta
+            and probe_insert_only
+            and (changes is not None or not self.partition_by)
+        ):
             # Insert-only fast path: if NO update key exists in the target,
             # MERGE degenerates to INSERT ALL — append files instead of
             # rewriting. This is the hot case for append-mostly streams
@@ -417,11 +494,7 @@ class ParquetTable:
                     .count()
                 )
             if any_match == 0:
-                self._archive()
-                writer = updates.write.mode("append")
-                if self.partition_by:
-                    writer = writer.partitionBy(*self.partition_by)
-                writer.parquet(self.path)
+                self._append(updates)
                 return changes
         if self.use_delta:
             # Real MERGE with file-level rewrite + transaction log
@@ -438,96 +511,129 @@ class ParquetTable:
                 .execute()
             )
             return changes
-        if target is None:
-            target = self.read(spark)
-        part_cols = [c for c in self.partition_by if c in updates.columns]
-        if part_cols:
-            # Partition-pruned merge: rewrite only partitions the updates
-            # touch, PLUS any partition where an update key already lives
-            # under a different partition value (e.g. a redelivered event
-            # with a corrected event_date) — otherwise the stale row in the
-            # untouched partition would survive and duplicate the key,
-            # diverging from Delta MERGE semantics. The relocation probe is
-            # a column-pruned scan of (keys + partition cols) semi-joined
-            # against the update keys — key-column bytes only, not the table.
-            upd_keys = updates.select(*keys).distinct()
-            relocated = (
-                target.select(*keys, *part_cols)
-                .join(upd_keys, on=keys, how="left_semi")
-                .select(*part_cols)
-                .distinct()
-            )
-            touched = {
-                tuple(r)
-                for r in updates.select(*part_cols).distinct().collect()
-            }
-            touched |= {tuple(r) for r in relocated.collect()}
-            touched = sorted(touched, key=lambda t: tuple(str(x) for x in t))
-            # Filter with isin (one flat IN-list reaches the scan as a
-            # partition-pruning predicate); an OR-of-AND chain over hundreds
-            # of partitions overflows the Catalyst visitor stack. Composite
-            # partition keys would need tuple-IN support — none of our
-            # tables use one, so that path keeps the flat-predicate shape
-            # only when it is safely small.
-            if not touched:
-                touched_target = target.limit(0)
-            elif len(part_cols) == 1:
-                c = part_cols[0]
-                vals = [t[0] for t in touched if t[0] is not None]
-                pred = F.col(c).isin(vals) if vals else F.lit(False)
-                if any(t[0] is None for t in touched):
-                    pred = pred | F.col(c).isNull()
-                touched_target = target.filter(pred)
-            elif len(touched) <= 64:
-                pred = None
-                for values in touched:
-                    clause = None
-                    for c, v in zip(part_cols, values):
-                        cond = (
-                            F.col(c).isNull() if v is None else (F.col(c) == F.lit(v))
-                        )
-                        clause = cond if clause is None else (clause & cond)
-                    pred = clause if pred is None else (pred | clause)
-                touched_target = target.filter(pred)
-            else:
-                # Too many composite partitions for a flat predicate: give
-                # up pruning, keep correctness (full merge rewrite).
-                self.overwrite(merge_upsert(target, updates, keys))
-                return changes
-            merged = merge_upsert(touched_target, updates, keys)
-            # Materialize before overwriting partitions we are reading from.
-            staging = f"{self.path}__stage_{uuid.uuid4().hex[:8]}"
-            merged.write.mode("overwrite").parquet(staging)
-            try:
-                staged = spark.read.parquet(staging)
-                self._archive()
-                (
-                    staged.write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy(*self.partition_by)
-                    .parquet(self.path)
-                )
-                # A partition whose only rows were relocated keys is absent
-                # from the merged output, so dynamic overwrite leaves its old
-                # directory behind — drop it explicitly.
-                written = {
-                    tuple(r)
-                    for r in staged.select(*part_cols).distinct().collect()
-                }
-                for values in set(map(tuple, touched)) - written:
-                    subdir = os.path.join(
-                        self.path,
-                        *[
-                            f"{c}={_hive_partition_value(v)}"
-                            for c, v in zip(part_cols, values)
-                        ],
-                    )
-                    shutil.rmtree(subdir, ignore_errors=True)
-            finally:
-                shutil.rmtree(staging, ignore_errors=True)
-        else:
+        if not self.partition_by:
             self.overwrite(merge_upsert(target, updates, keys))
+            return changes
+        # Partition-pruned merge: rewrite only partitions the updates touch,
+        # PLUS any partition where an update key already lives under a
+        # different partition value (e.g. a redelivered event with a
+        # corrected event_date) — otherwise the stale row in the untouched
+        # partition would survive and duplicate the key, diverging from
+        # Delta MERGE semantics. The relocation side is a column-pruned scan
+        # of (keys + partition cols) semi-joined against the update keys —
+        # key-column bytes only, not the table. It is empty exactly when no
+        # update key is in the target, so it doubles as the insert-only
+        # probe.
+        parts = self.partition_by
+        relocated = target.select(*keys, *parts).join(
+            updates.select(*keys), keys, "left_semi"
+        )
+        probe = (
+            updates.select(*parts, F.lit(False).alias("__matched"))
+            .unionByName(relocated.select(*parts, F.lit(True).alias("__matched")))
+            .distinct()
+            .collect()
+        )
+        if not any(r["__matched"] for r in probe):
+            self._append(updates)
+            return changes
+        touched = {tuple(r)[:-1] for r in probe}
+        pred = self._partition_filter(touched)
+        if pred is None:
+            self.overwrite(merge_upsert(target, updates, keys))
+        else:
+            self._rewrite_partitions(
+                merge_upsert(target.filter(pred), updates, keys), touched
+            )
         return changes
+
+    def _append(self, rows: DataFrame) -> None:
+        """INSERT ALL: add ``rows``' files to the table, rewriting none."""
+        self._archive()
+        writer = rows.write.mode("append")
+        if self.partition_by:
+            writer = writer.partitionBy(*self.partition_by)
+        writer.parquet(self.path)
+
+    def _partition_filter(self, values: set[tuple]) -> Column | None:
+        """A filter selecting the partitions ``values`` (tuples in
+        ``partition_by`` order), or None when it cannot be pruned safely.
+
+        One partition column gets one flat IN-list, which reaches the scan
+        as a partition-pruning predicate; an OR-of-AND chain over hundreds
+        of partitions overflows the Catalyst visitor stack. Composite
+        partition keys would need tuple-IN support — none of our tables use
+        one, so they keep the OR-of-AND shape only while it is small (64
+        partitions) and return None past that: the caller gives up pruning
+        and rewrites the whole table, keeping correctness."""
+        cols = self.partition_by
+        if len(cols) == 1:
+            c = cols[0]
+            vals = [t[0] for t in values if t[0] is not None]
+            pred = F.col(c).isin(vals) if vals else F.lit(False)
+            if any(t[0] is None for t in values):
+                pred = pred | F.col(c).isNull()
+            return pred
+        if len(values) > 64:
+            return None
+        pred = F.lit(False)
+        for t in values:
+            clause = F.lit(True)
+            for c, v in zip(cols, t):
+                clause = clause & (
+                    F.col(c).isNull() if v is None else (F.col(c) == F.lit(v))
+                )
+            pred = pred | clause
+        return pred
+
+    def _rewrite_partitions(self, rows: DataFrame, touched: set[tuple]) -> None:
+        """Replace the partitions ``touched`` with ``rows``, whose partition
+        values all lie in ``touched``. A touched partition with no rows
+        left is removed.
+
+        One Spark write materializes ``rows`` to a staging dir, partitioned
+        like the table, BEFORE any touched partition (which ``rows`` may
+        read) changes. Then each touched partition dir is renamed aside
+        into ``__old_*`` and its staged replacement renamed into place.
+        The list of touched partitions, with whether each existed, is
+        written to a manifest in ``__old_*`` before the first rename;
+        deleting it is the commit point. A crash before that leaves the
+        manifest behind, and ``repair_swap`` (run by every write) moves the
+        pre-images back."""
+        cols = self.partition_by
+        tag = uuid.uuid4().hex[:8]
+        staging, old = f"{self.path}__stage_{tag}", f"{self.path}__old_{tag}"
+        rows.write.mode("overwrite").partitionBy(*cols).parquet(staging)
+        try:
+            # Staged dirs are listed, not derived from values, so their
+            # names are whatever Spark wrote; the derived names only matter
+            # for touched partitions left empty.
+            rels = set(_partition_dirs(staging, len(cols)))
+            rels |= {
+                os.path.join(
+                    *[f"{c}={_hive_partition_value(v)}" for c, v in zip(cols, t)]
+                )
+                for t in touched
+            }
+            existed = {
+                rel: os.path.isdir(os.path.join(self.path, rel))
+                for rel in sorted(rels)
+            }
+            self._archive()
+            os.makedirs(old)
+            manifest = os.path.join(old, _COMMIT_MANIFEST)
+            with open(manifest, "w") as f:
+                json.dump(existed, f)
+            for rel, was_there in existed.items():
+                live, staged = os.path.join(self.path, rel), os.path.join(staging, rel)
+                if was_there:
+                    _move(live, os.path.join(old, rel))
+                if os.path.isdir(staged):
+                    _move(staged, live)
+            os.remove(manifest)
+            shutil.rmtree(old, ignore_errors=True)
+        finally:
+            shutil.rmtree(staging, ignore_errors=True)
 
     def delete_keys(
         self,
@@ -545,10 +651,10 @@ class ParquetTable:
         RETRACT buckets) can read it afterwards.
 
         Partitioned tables rewrite ONLY the partitions that contain a
-        doomed key (located with a column-pruned semi-join probe, same
-        shape as the merge relocation probe); a partition left empty has
-        its directory dropped. Past the same composite-partition cap the
-        merge path uses, pruning is abandoned for a full anti-join rewrite
+        doomed key (located from the pinned pre-images), through the same
+        staged rename commit as ``merge``; a partition left empty has its
+        directory dropped. Past the same composite-partition cap the merge
+        path uses, pruning is abandoned for a full anti-join rewrite
         rather than building an unbounded OR-of-AND driver-side predicate.
         Unpartitioned tables anti-join and rewrite atomically.
 
@@ -564,6 +670,7 @@ class ParquetTable:
                 .limit(0)
                 .withColumn("_change_type", F.lit("delete"))
             )
+        self.repair_swap()
         if not self.exists():
             return (0, empty_changes) if capture_changes else 0
         target = self.read(spark)
@@ -594,55 +701,17 @@ class ParquetTable:
                 .execute()
             )
             return (removed, changes) if capture_changes else removed
-        part_cols = list(self.partition_by)
-        hit: set[tuple] = set()
-        if part_cols:
+        pred = None
+        if self.partition_by:
             hit = {
-                tuple(r) for r in removed_rows.select(*part_cols).distinct().collect()
+                tuple(r)
+                for r in removed_rows.select(*self.partition_by).distinct().collect()
             }
-        if part_cols and (len(part_cols) == 1 or len(hit) <= 64):
-            if len(part_cols) == 1:
-                c = part_cols[0]
-                vals = [t[0] for t in hit if t[0] is not None]
-                pred = F.col(c).isin(vals) if vals else F.lit(False)
-                if any(t[0] is None for t in hit):
-                    pred = pred | F.col(c).isNull()
-            else:
-                pred = F.lit(False)
-                for values in hit:
-                    clause = F.lit(True)
-                    for c, v in zip(part_cols, values):
-                        clause = clause & (
-                            F.col(c).isNull() if v is None else (F.col(c) == F.lit(v))
-                        )
-                    pred = pred | clause
-            kept = target.filter(pred).join(doomed_keys, keys, "left_anti")
-            staging = f"{self.path}__stage_{uuid.uuid4().hex[:8]}"
-            kept.write.mode("overwrite").parquet(staging)
-            try:
-                staged = spark.read.parquet(staging)
-                self._archive()
-                (
-                    staged.write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy(*part_cols)
-                    .parquet(self.path)
-                )
-                written = {
-                    tuple(r)
-                    for r in staged.select(*part_cols).distinct().collect()
-                }
-                for values in hit - written:  # partition emptied: drop dir
-                    subdir = os.path.join(
-                        self.path,
-                        *[
-                            f"{c}={_hive_partition_value(v)}"
-                            for c, v in zip(part_cols, values)
-                        ],
-                    )
-                    shutil.rmtree(subdir, ignore_errors=True)
-            finally:
-                shutil.rmtree(staging, ignore_errors=True)
+            pred = self._partition_filter(hit)
+        if pred is not None:
+            self._rewrite_partitions(
+                target.filter(pred).join(doomed_keys, keys, "left_anti"), hit
+            )
         else:
             # Unpartitioned, or composite-partition hit set too large for a
             # flat pruning predicate: full anti-join rewrite (atomic swap).
@@ -655,8 +724,10 @@ class ParquetTable:
         from interrupted writes. Returns the number of dirs removed.
         Hard-linked files release disk only once the last snapshot
         referencing them is removed — exactly Delta's data/log retention
-        split."""
-        removed = 0
+        split. A crashed commit's pre-image is restored first, never
+        deleted (``repair_swap``)."""
+        stats = self.repair_swap()
+        removed = len(stats["removed_old"]) + len(stats["removed_tmp"])
         vs = self.versions()
         for stale in vs[: max(0, len(vs) - retain_versions)]:
             shutil.rmtree(

@@ -108,14 +108,16 @@ def run_enrich(
         )
         if row is not None and row["m"] is not None:
             bound = row["m"] - lookback
+            # event_date = to_date(event_ts) (parse_orders/parse_payments,
+            # pinned-UTC session), so the date bound drops no row the
+            # event_ts bound keeps; it prunes the scan to recent partitions.
+            recent = (F.col("event_ts") >= F.lit(bound)) & (
+                F.col("event_date") >= F.to_date(F.lit(bound))
+            )
             recent_keys = (
-                orders_clean.filter(F.col("event_ts") >= F.lit(bound))
+                orders_clean.filter(recent)
                 .select("order_id")
-                .unionByName(
-                    payments_clean.filter(F.col("event_ts") >= F.lit(bound)).select(
-                        "order_id"
-                    )
-                )
+                .unionByName(payments_clean.filter(recent).select("order_id"))
                 .distinct()
             )
             orders_clean = orders_clean.join(recent_keys, "order_id", "left_semi")

@@ -6,6 +6,9 @@ fct_sales_minute.sql:35-40, dbt schema.yml:4-20)."""
 from __future__ import annotations
 
 import datetime as dt
+import json
+import os
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -119,6 +122,76 @@ def test_late_data_recompute(spark, tmp_path):
     assert out["2024-01-01 12:00:00"]["gmv"] == 10.0
 
 
+def test_late_data_recompute_date_pruned_lookbacks(spark, tmp_path, kafka_rows):
+    """The same late-data policy end to end, with both 2-hour bounds just
+    after midnight: run_enrich's and build_fct_sales_minute's
+    ``event_date`` predicates prune date partitions and must drop no row
+    their ``event_ts`` bounds keep — partitioned and flat silver agree."""
+
+    def order(offset, oid, total, event_time, arrived):
+        value = json.dumps(
+            {"order_id": oid, "user_id": "u", "currency": "USD",
+             "total_amount": total, "event_time": event_time}
+        )
+        return (oid, value, "orders", 0, offset, ts(arrived), 0)
+
+    def payment(offset, oid, cents, arrived):
+        value = json.dumps({"order_id": int(oid), "amount_cents": cents})
+        return (oid, value, "payments", 0, offset, ts(arrived), 0)
+
+    # History: the head (order 4) is paid at 02:01:30, so enrich's bound is
+    # 00:01:30 and gold's (head bucket 02:01 - 2h) is 00:01.
+    orders1 = [
+        order(0, "1", 10.0, "2024-03-01T22:00:00Z", "2024-03-01 22:00:00"),
+        order(1, "2", 20.0, "2024-03-01T23:50:00Z", "2024-03-01 23:50:00"),
+        order(2, "5", 5.0, "2024-03-02T00:00:10Z", "2024-03-02 00:00:10"),
+        order(3, "6", 6.0, "2024-03-02T00:30:00Z", "2024-03-02 00:30:00"),
+        order(4, "4", 4.0, "2024-03-02T02:01:30Z", "2024-03-02 02:01:30"),
+        order(5, "8", 8.0, "2024-03-01T23:59:59Z", "2024-03-01 23:59:59"),
+    ]
+    payments1 = [
+        payment(0, "1", 1000, "2024-03-01 22:01:00"),
+        payment(1, "5", 500, "2024-03-02 00:00:20"),
+        payment(2, "6", 600, "2024-03-02 00:31:00"),
+        payment(3, "4", 400, "2024-03-02 02:01:30"),
+    ]
+    # Arrivals: a late order after the bound (7), payment-only activity for
+    # orders from the day before (2, 8) and an orphan payment (99).
+    orders2 = [order(6, "7", 7.0, "2024-03-02T00:45:00Z", "2024-03-02 02:02:00")]
+    payments2 = [
+        payment(4, "7", 700, "2024-03-02 02:02:10"),
+        payment(5, "2", 2000, "2024-03-02 01:10:00"),
+        payment(6, "8", 800, "2024-03-02 01:30:00"),
+        payment(7, "99", 100, "2024-03-02 01:20:00"),
+    ]
+    results = []
+    for partition_silver in (True, False):
+        lh = pipeline.Lakehouse(
+            str(tmp_path / f"p{partition_silver}"), partition_silver=partition_silver
+        )
+        pipeline.run_all(spark, lh, kafka_rows(orders1), kafka_rows(payments1))
+        pipeline.run_bronze(
+            lh, kafka_rows(orders1 + orders2), kafka_rows(payments1 + payments2)
+        )
+        pipeline.run_silver(spark, lh)
+        pipeline.run_enrich(spark, lh)
+        pipeline.run_gold(spark, lh)
+        enriched = {
+            r["order_id"]: r.asDict()
+            for r in lh.enriched.read(spark).drop("order_date").collect()
+        }
+        gold = {
+            str(r["minute_bucket"]): (r["gmv"], r["paid_orders"])
+            for r in lh.fct_sales_minute.read(spark).collect()
+        }
+        results.append((enriched, gold))
+    assert results[0] == results[1]
+    enriched, gold = results[0]
+    assert sorted(enriched) == ["1", "2", "4", "5", "6", "7", "8"]
+    assert all(r["fully_paid"] for r in enriched.values())
+    assert gold["2024-03-02 00:45:00"] == (7.0, 1)
+
+
 def test_too_late_data_ignored(spark, tmp_path):
     """An event older than the 2-hour lookback does NOT rewrite history —
     the incremental bound excludes it (reference behavior: the cron+lookback
@@ -165,6 +238,92 @@ def test_partitioned_merge_key_relocation(spark, tmp_path):
         ("a", "2024-01-02", 2.0),
         ("b", "2024-01-02", 3.0),
     }
+
+
+def test_partitioned_merge_crash_between_renames_restores_partition(
+    spark, tmp_path, monkeypatch
+):
+    """A crash after a partition was renamed aside but before its staged
+    replacement was renamed in must not lose the partition: repair_swap —
+    run by the next write — restores the pre-merge rows from the
+    leftovers, and that write then lands with no strays."""
+    from ecommerce_data_pipeline_spark import lake
+
+    t = ParquetTable(str(tmp_path / "t"), partition_by=["event_date"])
+    df = lambda rows: spark.createDataFrame(  # noqa: E731
+        rows, "k string, v double, event_date date"
+    )
+    d1, d2 = dt.date(2024, 1, 1), dt.date(2024, 1, 2)
+    t.merge(spark, df([("a", 1.0, d1), ("b", 1.0, d2)]), keys=["k"])
+
+    def state():
+        return {(r["k"], r["v"], r["event_date"]) for r in t.read(spark).collect()}
+
+    before = state()
+    real_rename = os.rename
+    calls = []
+
+    def crashing_rename(src, dst):
+        calls.append(dst)
+        if len(calls) == 2:
+            raise OSError("simulated crash between partition renames")
+        real_rename(src, dst)
+
+    monkeypatch.setattr(lake.os, "rename", crashing_rename)
+    with pytest.raises(OSError, match="simulated crash"):
+        t.merge(spark, df([("a", 2.0, d1)]), keys=["k"])
+    monkeypatch.undo()
+    assert "__old_" in calls[0]  # the live partition had been moved aside
+    assert not os.path.exists(str(tmp_path / "t" / "event_date=2024-01-01"))
+
+    assert t.repair_swap()["restored"]
+    assert state() == before
+
+    calls.clear()
+    monkeypatch.setattr(lake.os, "rename", crashing_rename)
+    with pytest.raises(OSError, match="simulated crash"):
+        t.merge(spark, df([("a", 2.0, d1)]), keys=["k"])
+    monkeypatch.undo()
+    t.merge(spark, df([("a", 2.0, d1)]), keys=["k"])
+    assert state() == {("a", 2.0, d1), ("b", 1.0, d2)}
+    assert os.listdir(str(tmp_path)) == ["t"]
+
+
+def test_partitioned_merge_job_count(spark, tmp_path):
+    """Host-independent work counter for the partitioned merge: the
+    target schema read, ONE probe (relocated partitions double as the
+    insert-only answer) and ONE write — three Spark jobs whether the batch
+    is insert-only (append) or matches a key (staged rename commit). AQE
+    submits each query stage as its own job, split by timing, so the
+    count is taken with AQE off, where each action is one job."""
+    sc = spark.sparkContext
+    t = ParquetTable(str(tmp_path / "t"), partition_by=["event_date"])
+    df = lambda rows: spark.createDataFrame(  # noqa: E731
+        rows, "k string, v double, event_date date"
+    )
+    d1, d2 = dt.date(2024, 1, 1), dt.date(2024, 1, 2)
+    t.merge(spark, df([("a", 1.0, d1), ("b", 1.0, d2)]), keys=["k"])
+
+    def merge_jobs(rows) -> int:
+        group = f"merge-job-count-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "partitioned merge job count")
+        try:
+            t.merge(spark, df(rows), keys=["k"])
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        # Job events reach the status store through the async listener bus.
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        assert merge_jobs([("c", 1.0, d2)]) == 3  # insert-only
+        assert merge_jobs([("a", 2.0, d1)]) == 3  # one matched key
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    got = {(r["k"], r["v"], r["event_date"]) for r in t.read(spark).collect()}
+    assert got == {("a", 2.0, d1), ("b", 1.0, d2), ("c", 1.0, d2)}
 
 
 def test_freshness_check_injectable_now(spark):
