@@ -166,6 +166,8 @@ class ParquetTable:
     ``partition_by`` enables partition-pruned merges; silver tables should be
     partitioned by ``event_date`` and gold facts can stay unpartitioned until
     they outgrow a single rewrite (minute buckets: ~0.5M rows/year — tiny).
+    A plain-parquet table takes at most one partition column: the pruned
+    merge and delete select partitions with one flat IN-list.
     """
 
     def __init__(
@@ -177,6 +179,11 @@ class ParquetTable:
     ):
         self.path = path
         self.partition_by = partition_by or []
+        if len(self.partition_by) > 1 and not use_delta:
+            raise ValueError(
+                "plain-parquet tables take one partition column, got "
+                f"{self.partition_by}"
+            )
         if use_delta and not _HAS_DELTA:
             raise ImportError(
                 "use_delta=True requires delta-spark (pip install delta-spark "
@@ -538,13 +545,10 @@ class ParquetTable:
             self._append(updates)
             return changes
         touched = {tuple(r)[:-1] for r in probe}
-        pred = self._partition_filter(touched)
-        if pred is None:
-            self.overwrite(merge_upsert(target, updates, keys))
-        else:
-            self._rewrite_partitions(
-                merge_upsert(target.filter(pred), updates, keys), touched
-            )
+        self._rewrite_partitions(
+            merge_upsert(target.filter(self._partition_filter(touched)), updates, keys),
+            touched,
+        )
         return changes
 
     def _append(self, rows: DataFrame) -> None:
@@ -555,35 +559,18 @@ class ParquetTable:
             writer = writer.partitionBy(*self.partition_by)
         writer.parquet(self.path)
 
-    def _partition_filter(self, values: set[tuple]) -> Column | None:
-        """A filter selecting the partitions ``values`` (tuples in
-        ``partition_by`` order), or None when it cannot be pruned safely.
+    def _partition_filter(self, values: set[tuple]) -> Column:
+        """A filter selecting the partitions ``values`` (1-tuples of the
+        table's one partition column).
 
-        One partition column gets one flat IN-list, which reaches the scan
-        as a partition-pruning predicate; an OR-of-AND chain over hundreds
-        of partitions overflows the Catalyst visitor stack. Composite
-        partition keys would need tuple-IN support — none of our tables use
-        one, so they keep the OR-of-AND shape only while it is small (64
-        partitions) and return None past that: the caller gives up pruning
-        and rewrites the whole table, keeping correctness."""
-        cols = self.partition_by
-        if len(cols) == 1:
-            c = cols[0]
-            vals = [t[0] for t in values if t[0] is not None]
-            pred = F.col(c).isin(vals) if vals else F.lit(False)
-            if any(t[0] is None for t in values):
-                pred = pred | F.col(c).isNull()
-            return pred
-        if len(values) > 64:
-            return None
-        pred = F.lit(False)
-        for t in values:
-            clause = F.lit(True)
-            for c, v in zip(cols, t):
-                clause = clause & (
-                    F.col(c).isNull() if v is None else (F.col(c) == F.lit(v))
-                )
-            pred = pred | clause
+        One flat IN-list reaches the scan as a partition-pruning predicate;
+        an OR chain over hundreds of partitions would overflow the Catalyst
+        visitor stack."""
+        c = self.partition_by[0]
+        vals = [t[0] for t in values if t[0] is not None]
+        pred = F.col(c).isin(vals) if vals else F.lit(False)
+        if any(t[0] is None for t in values):
+            pred = pred | F.col(c).isNull()
         return pred
 
     def _rewrite_partitions(self, rows: DataFrame, touched: set[tuple]) -> None:
@@ -653,10 +640,8 @@ class ParquetTable:
         Partitioned tables rewrite ONLY the partitions that contain a
         doomed key (located from the pinned pre-images), through the same
         staged rename commit as ``merge``; a partition left empty has its
-        directory dropped. Past the same composite-partition cap the merge
-        path uses, pruning is abandoned for a full anti-join rewrite
-        rather than building an unbounded OR-of-AND driver-side predicate.
-        Unpartitioned tables anti-join and rewrite atomically.
+        directory dropped. Unpartitioned tables anti-join and rewrite
+        atomically.
 
         The removed-row count is computed from the pre-mutation semi-join
         (never by re-reading the table afterwards): a delete that empties
@@ -701,20 +686,18 @@ class ParquetTable:
                 .execute()
             )
             return (removed, changes) if capture_changes else removed
-        pred = None
         if self.partition_by:
             hit = {
                 tuple(r)
                 for r in removed_rows.select(*self.partition_by).distinct().collect()
             }
-            pred = self._partition_filter(hit)
-        if pred is not None:
             self._rewrite_partitions(
-                target.filter(pred).join(doomed_keys, keys, "left_anti"), hit
+                target.filter(self._partition_filter(hit)).join(
+                    doomed_keys, keys, "left_anti"
+                ),
+                hit,
             )
         else:
-            # Unpartitioned, or composite-partition hit set too large for a
-            # flat pruning predicate: full anti-join rewrite (atomic swap).
             self.overwrite(target.join(doomed_keys, keys, "left_anti"))
         return (removed, changes) if capture_changes else removed
 

@@ -40,14 +40,16 @@ of reference code.
 
 from __future__ import annotations
 
+import functools
 import json
 import math
-import os
 import re
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ecommerce_data_pipeline_spark.session import run_independent
 
 
 def file_sizes(spark: SparkSession, path: str) -> DataFrame:
@@ -542,7 +544,6 @@ def rewrite_versioned(
     spark: SparkSession,
     path: str,
     rewrite_fn,
-    max_concurrent: int | None = None,
 ) -> dict:
     """Generic LAYOUT-maintenance commit over the versioned layout — the
     manifest-pointer discipline ``retention_delete_versioned`` certifies,
@@ -573,7 +574,7 @@ def rewrite_versioned(
     its own staging dir, and Spark's FIFO scheduler back-fills executors
     freed by one job's straggler tail with the next job's tasks — the
     sequential loop left most of the cluster idle between per-partition
-    jobs. ``max_concurrent`` (or $SPARK_GRAFT_MAINT_POOL, default 4)
+    jobs. ``session.run_independent`` ($SPARK_GRAFT_MAINT_POOL, default 4)
     bounds in-flight jobs: enough to fill stage tails, few enough that
     concurrent rewrites do not fight for executor memory at 100 TB
     partition sizes. Commit semantics are unchanged — ALL rewrites still
@@ -613,21 +614,13 @@ def rewrite_versioned(
         return dest
 
     values = sorted(mapping)
-    pool_n = max_concurrent or int(os.environ.get("SPARK_GRAFT_MAINT_POOL", "4"))
-    pool_n = max(1, min(pool_n, len(values)))
-    if pool_n == 1:
-        results = [(v, _one(v)) for v in values]
-    else:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=pool_n) as pool:
-            # pool.map preserves input order and re-raises the first
-            # failure at iteration — aborting before the manifest publish.
-            results = list(zip(values, pool.map(_one, values)))
+    # Results come back in sorted-value order; the first failure re-raises
+    # before the manifest publish.
+    dests = run_independent(*(functools.partial(_one, v) for v in values))
     new_map = dict(mapping)
     rewritten: list[str] = []
     skipped: list[str] = []
-    for v, dest in results:
+    for v, dest in zip(values, dests):
         if dest is None:
             skipped.append(v)
         else:

@@ -86,10 +86,13 @@ double-count the retention window).
 
 from __future__ import annotations
 
+import functools
 import json
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ecommerce_data_pipeline_spark.session import run_independent
 
 _MANIFEST = "_consumed_inputs"
 
@@ -117,34 +120,23 @@ def write_posting_batch(df: DataFrame, root: str, batch_id: int) -> None:
     write_batch_output(df, root, batch_id, partition_by=("cell",))
 
 
-def write_posting_batches(
-    batches, root: str, max_workers: int | None = None
-) -> None:
-    """Write several INDEPENDENT micro-batch posting dirs from a small
-    driver thread pool (guide §2.6 "overlap independent jobs", r17 — the
-    same pattern as layout.rewrite_versioned's pool): each batch owns its
-    private ``batch=b<id>`` directory, so the writes share no state and
-    FIFO scheduling back-fills executors freed by one write's straggler
-    tail with the next write's tasks. ``batches`` is an iterable of
-    ``(df, batch_id)``; the pool is bounded by ``max_workers`` (or
-    $SPARK_GRAFT_MAINT_POOL, default 4). Lifecycle queries that assert
-    ordering BETWEEN write waves still call this once per wave — only
-    within-wave order (which no reader can observe: dirs are disjoint
-    and discovery lists the final layout) is relaxed."""
-    import os as _os
-    from concurrent.futures import ThreadPoolExecutor
-
-    items = list(batches)
-    n = max_workers or int(_os.environ.get("SPARK_GRAFT_MAINT_POOL", "4"))
-    n = max(1, min(n, len(items)))
-    if n == 1:
-        for df, bid in items:
-            write_posting_batch(df, root, bid)
-        return
-    with ThreadPoolExecutor(max_workers=n) as pool:
-        list(
-            pool.map(lambda t: write_posting_batch(t[0], root, t[1]), items)
+def write_posting_batches(batches, root: str) -> None:
+    """Write several INDEPENDENT micro-batch posting dirs side by side
+    (``session.run_independent``, r17 — the same pattern as
+    layout.rewrite_versioned): each batch owns its private ``batch=b<id>``
+    directory, so the writes share no state and FIFO scheduling back-fills
+    executors freed by one write's straggler tail with the next write's
+    tasks. ``batches`` is an iterable of
+    ``(df, batch_id)``. Lifecycle queries that assert ordering BETWEEN
+    write waves still call this once per wave — only within-wave order
+    (which no reader can observe: dirs are disjoint and discovery lists
+    the final layout) is relaxed."""
+    run_independent(
+        *(
+            functools.partial(write_posting_batch, df, root, bid)
+            for df, bid in batches
         )
+    )
 
 
 def _fs(spark: SparkSession, root: str):

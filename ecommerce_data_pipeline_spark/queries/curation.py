@@ -3,6 +3,9 @@ contamination screens, repetition stats, shard assignment."""
 
 from __future__ import annotations
 
+import os
+from urllib.parse import unquote, urlparse
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -590,6 +593,21 @@ def q_curated_training_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _local_scan_bytes(df: DataFrame) -> int | None:
+    """Total on-disk bytes of ``df``'s input files. ``inputFiles()`` gives
+    URIs, percent-encoded (a space arrives as ``%20``), so each is parsed
+    and unquoted; a listed local file that is missing raises. None when an
+    input lives off the local filesystem (hdfs:, s3a:, ...): sizing it
+    would need a remote listing per file, so the caller does not pin."""
+    total = 0
+    for f in df.inputFiles():
+        uri = urlparse(f)
+        if uri.scheme not in ("", "file"):
+            return None
+        total += os.path.getsize(unquote(uri.path))
+    return total
+
+
 @register(
     "source_quality_drift",
     # PSI over the 5 discrete quality-score levels (0, .25, .5, .75, 1),
@@ -666,23 +684,13 @@ def q_source_quality_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame is re-read from the block manager; below, the recompute is
     cheaper. Values are identical either way — the checkpoint is pure
     materialization (VERDICT r16 ask #6)."""
-    import os as _os
-
     docs = load_table(spark, sf_dir, "documents")
     q = tx.quality_score(docs).select("doc_id", "quality_score").join(
         docs.select("doc_id", "source"), "doc_id"
     )
-    pin_bytes = int(
-        _os.environ.get("SPARK_GRAFT_DRIFT_PIN_BYTES", str(4 << 20))
-    )
-    try:
-        scan_bytes = sum(
-            _os.path.getsize(f[len("file:"):] if f.startswith("file:") else f)
-            for f in docs.inputFiles()
-        )
-    except OSError:
-        scan_bytes = 0
-    if scan_bytes >= pin_bytes:
+    pin_bytes = int(os.environ.get("SPARK_GRAFT_DRIFT_PIN_BYTES", str(4 << 20)))
+    scan_bytes = _local_scan_bytes(docs)
+    if scan_bytes is not None and scan_bytes >= pin_bytes:
         q = q.localCheckpoint(eager=False)
     levels = docs.sparkSession.createDataFrame(
         [(lv,) for lv in (0.0, 0.25, 0.5, 0.75, 1.0)], "level double"
@@ -1239,7 +1247,6 @@ def q_corpus_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema-pinned json scan (no inferSchema pass), PERMISSIVE with
     corrupt-line capture — one broken line in a crawl dump costs one
     quarantine row, not the job."""
-    import shutil
     import tempfile
 
     from ecommerce_data_pipeline_spark.sources.corpus_io import (
@@ -1248,8 +1255,9 @@ def q_corpus_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    root = tempfile.mkdtemp(prefix="corpus_jsonl_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="corpus_jsonl_", ignore_cleanup_errors=True
+    ) as root:
         write_corpus_jsonl(docs, f"{root}/corpus", n_shards=8)
         good, _quarantine = read_corpus_jsonl(spark, f"{root}/corpus")
         return (
@@ -1263,8 +1271,6 @@ def q_corpus_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 @register(
@@ -1297,7 +1303,6 @@ def q_quarantine_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     plus their reparse — at a crawl's 1e-6 corruption rate that is MBs,
     not TBs; the relaxed reparse is the same pruning-exempt full-struct
     ``from_json`` discipline as the reader itself."""
-    import shutil
     import tempfile
 
     from pyspark.sql.types import StructType
@@ -1325,8 +1330,9 @@ def q_quarantine_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.to_json(F.struct("doc_id", "source", "n_chars")))
         .alias("value")
     )
-    root = tempfile.mkdtemp(prefix="quarantine_recovery_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="quarantine_recovery_", ignore_cleanup_errors=True
+    ) as root:
         src = f"{root}/dump"
         lines.repartition(4).write.mode("overwrite").text(src)
         strict = StructType.fromDDL(
@@ -1366,8 +1372,6 @@ def q_quarantine_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 @register(

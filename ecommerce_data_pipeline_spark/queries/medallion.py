@@ -751,14 +751,14 @@ def q_cdc_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     Downstream incremental consumers (gold refresh, replication) read
     this feed instead of diffing snapshots. Returns the per-change-type
     summary of the second (incremental) merge."""
-    import shutil
     import tempfile
 
     from ecommerce_data_pipeline_spark.lake import ParquetTable
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text", "source")
-    root = tempfile.mkdtemp(prefix="cdc_feed_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="cdc_feed_", ignore_cleanup_errors=True
+    ) as root:
         t = ParquetTable(f"{root}/docs")
         t.merge(spark, docs.filter(F.col("doc_id") % 2 == 0), keys=["doc_id"])
         updates = docs.filter(F.col("doc_id") % 3 == 0).withColumn(
@@ -773,8 +773,6 @@ def q_cdc_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 @register(
@@ -807,14 +805,14 @@ def q_table_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     per source. The oracle recomputes the diff from the mutation rule, so
     a snapshot that leaked post-mutation bytes (or a merge that failed to
     rewrite) breaks the hash."""
-    import shutil
     import tempfile
 
     from ecommerce_data_pipeline_spark.lake import ParquetTable
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text", "source")
-    root = tempfile.mkdtemp(prefix="time_travel_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="time_travel_", ignore_cleanup_errors=True
+    ) as root:
         t = ParquetTable(f"{root}/docs", keep_versions=3)
         t.merge(spark, docs.filter(F.col("doc_id") % 2 == 0), keys=["doc_id"])
         t.merge(
@@ -848,8 +846,6 @@ def q_table_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 @register(
@@ -878,14 +874,14 @@ def q_schema_evolution_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     merged rows keep their values — then summarize the evolved table per
     source. The oracle derives the same summary from the mutation rule,
     so a dropped column, a mis-backfill, or a lost update all break it."""
-    import shutil
     import tempfile
 
     from ecommerce_data_pipeline_spark.lake import ParquetTable
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text", "source")
-    root = tempfile.mkdtemp(prefix="schema_evo_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="schema_evo_", ignore_cleanup_errors=True
+    ) as root:
         t = ParquetTable(f"{root}/docs")
         t.merge(spark, docs.filter(F.col("doc_id") % 2 == 0), keys=["doc_id"])
         updates = docs.filter(F.col("doc_id") % 3 == 0).withColumn(
@@ -904,8 +900,6 @@ def q_schema_evolution_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 @register(
@@ -929,14 +923,14 @@ def q_gdpr_delete_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     capture, then join the surviving table's counts with the delete
     feed's per-source pre-image counts — proving rows left the table AND
     the CDF feed recorded exactly their pre-images."""
-    import shutil
     import tempfile
 
     from ecommerce_data_pipeline_spark.lake import ParquetTable
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text", "source")
-    root = tempfile.mkdtemp(prefix="gdpr_del_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="gdpr_del_", ignore_cleanup_errors=True
+    ) as root:
         t = ParquetTable(f"{root}/docs")
         t.merge(spark, docs, keys=["doc_id"])
         doomed = docs.filter(F.col("doc_id") % 7 == 0).select("doc_id")
@@ -966,8 +960,6 @@ def q_gdpr_delete_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 @register(
@@ -1003,7 +995,6 @@ def q_incremental_view_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference analogue: the dbt incremental gold model's MERGE contract
     (fct_sales_minute.sql:2-6) lifted from minute buckets to join keys.
     """
-    import shutil
     import tempfile
 
     from ecommerce_data_pipeline_spark.lake import ParquetTable
@@ -1030,8 +1021,7 @@ def q_incremental_view_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
             "order_id", "total_amount", "legs_revenue", "n_legs"
         )
 
-    root = tempfile.mkdtemp(prefix="ivr_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="ivr_", ignore_cleanup_errors=True) as root:
         legs_t = ParquetTable(f"{root}/legs")
         view_t = ParquetTable(f"{root}/view")
         legs_t.merge(spark, legs.filter(~late), keys=["order_id", "leg_no"])
@@ -1055,5 +1045,3 @@ def q_incremental_view_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, refreshed, keys=["order_id"], probe_insert_only=False
         )
         return view_t.read(spark).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)

@@ -33,6 +33,7 @@ from ecommerce_data_pipeline_spark.operators.service import (
     cart_totals,
     inventory_counters,
 )
+from ecommerce_data_pipeline_spark.session import scoped_conf
 from ecommerce_data_pipeline_spark.sources.events import orders_events, payments_events
 from ecommerce_data_pipeline_spark.sources.parquet import load_table, register_views
 
@@ -591,7 +592,6 @@ def q_orders_tbl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one balanced shard per task out, one schema-pinned csv scan
     back (no inferSchema pass), PERMISSIVE with corrupt-line capture."""
-    import shutil
     import tempfile
 
     from ecommerce_data_pipeline_spark.functions import epoch_micros
@@ -601,8 +601,9 @@ def q_orders_tbl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     orders = load_table(spark, sf_dir, "orders")
-    root = tempfile.mkdtemp(prefix="orders_tbl_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="orders_tbl_", ignore_cleanup_errors=True
+    ) as root:
         write_tbl(orders, f"{root}/orders", n_shards=8)
         good, _quarantine = read_tbl(spark, f"{root}/orders", orders.schema)
         secs = F.floor(epoch_micros(F.col("o_orderdate")) / F.lit(1e6)).cast(
@@ -618,8 +619,6 @@ def q_orders_tbl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 @register(
@@ -646,7 +645,6 @@ def q_orders_tbl_multiline_roundtrip(spark: SparkSession, sf_dir: str) -> DataFr
     Scale boundary (by design): multiLine reads each file as one
     unsplittable unit — this is the modest-landing-file path, not the
     100 TB scan (the line-splittable default is; see tabular_io)."""
-    import shutil
     import tempfile
 
     from pyspark import StorageLevel
@@ -662,8 +660,9 @@ def q_orders_tbl_multiline_roundtrip(spark: SparkSession, sf_dir: str) -> DataFr
         F.concat_ws("\n", "o_orderpriority", "o_orderstatus").alias("note"),
     )
     n_src = doc.count()
-    root = tempfile.mkdtemp(prefix="orders_tbl_ml_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="orders_tbl_ml_", ignore_cleanup_errors=True
+    ) as root:
         write_tbl(doc, f"{root}/orders", n_shards=4)
         good, quarantine, raw = read_tbl(
             spark,
@@ -691,8 +690,6 @@ def q_orders_tbl_multiline_roundtrip(spark: SparkSession, sf_dir: str) -> DataFr
             return result
         finally:
             raw.unpersist(blocking=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 # One SQL text serves BOTH engines: recursive CTEs are ANSI (DuckDB has
@@ -830,14 +827,14 @@ def q_zorder_orders_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one approxQuantile sample pass per clustered column (driver
     holds n_cols x 2^bits boundaries — KBs), one range shuffle; the
     maintenance-window layout job for petabyte fact tables."""
-    import shutil
     import tempfile
 
     from ecommerce_data_pipeline_spark.operators.zorder import zorder
 
     orders = load_table(spark, sf_dir, "orders")
-    root = tempfile.mkdtemp(prefix="zorder_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="zorder_", ignore_cleanup_errors=True
+    ) as root:
         path = f"{root}/orders"
         zorder(orders, ["o_orderkey", "o_custkey"], bits=5, n_files=16).write.mode(
             "overwrite"
@@ -872,8 +869,6 @@ def q_zorder_orders_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 @register(
@@ -2383,14 +2378,14 @@ def q_lineitem_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     columnar scan with predicate pushdown + column pruning — the same
     scan contract as S3's parquet path, proven here on the second
     format."""
-    import shutil
     import tempfile
 
     from ecommerce_data_pipeline_spark.plans import assert_pushed
 
     li = load_table(spark, sf_dir, "lineitem")
-    root = tempfile.mkdtemp(prefix="orc_rt_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="orc_rt_", ignore_cleanup_errors=True
+    ) as root:
         path = f"{root}/lineitem"
         (
             li.repartition(8)
@@ -2413,8 +2408,6 @@ def q_lineitem_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -2518,7 +2511,6 @@ def q_file_skipping_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the index is O(files) metadata — the same thing Delta keeps in
     its log and Iceberg in manifests; at 100 TB the driver prunes the
     index (a filter on a KB..MB-scale table), never lists data."""
-    import shutil
     import tempfile
 
     from ecommerce_data_pipeline_spark.operators.fileindex import (
@@ -2528,8 +2520,9 @@ def q_file_skipping_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ecommerce_data_pipeline_spark.operators.zorder import zorder
 
     orders = load_table(spark, sf_dir, "orders")
-    root = tempfile.mkdtemp(prefix="fileskip_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="fileskip_", ignore_cleanup_errors=True
+    ) as root:
         path = f"{root}/orders"
         zorder(
             orders, ["o_totalprice", "o_custkey"], bits=5, n_files=16
@@ -2551,8 +2544,6 @@ def q_file_skipping_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 @register(
@@ -2580,7 +2571,6 @@ def q_bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the co-location contract Hive/Spark bucketing and Iceberg bucket
     partition transforms exist for. Broadcast is disabled during the
     guard so the assertion is about bucketing, never broadcast sizes."""
-    import shutil
     import tempfile
     import uuid
 
@@ -2590,50 +2580,44 @@ def q_bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_orderkey", "l_returnflag", "l_extendedprice"
     )
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey")
-    root = tempfile.mkdtemp(prefix="bucketed_join_")
     suffix = uuid.uuid4().hex[:8]
     t_li, t_ord = f"bkt_lineitem_{suffix}", f"bkt_orders_{suffix}"
-    try:
-        write_bucketed(
-            li, t_li, ["l_orderkey"], n_buckets=16,
-            sort_cols=["l_orderkey"], path=f"{root}/li",
-        )
-        write_bucketed(
-            orders.withColumnRenamed("o_orderkey", "l_orderkey"),
-            t_ord, ["l_orderkey"], n_buckets=16,
-            sort_cols=["l_orderkey"], path=f"{root}/ord",
-        )
-        # Save/restore (NOT unset): unset falls back to the built-in 10MB
-        # default, silently shrinking the session's configured 64m for
-        # every query that runs after this one.
-        prev_bcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    with tempfile.TemporaryDirectory(
+        prefix="bucketed_join_", ignore_cleanup_errors=True
+    ) as root:
         try:
-            joined = spark.table(t_li).join(spark.table(t_ord), "l_orderkey")
-            plan = joined._jdf.queryExecution().executedPlan().toString()
-            if "SortMergeJoin" not in plan or "Exchange" in plan:
-                raise AssertionError(
-                    "bucketed join not co-located: "
-                    + ("missing SortMergeJoin; " if "SortMergeJoin" not in plan else "")
-                    + ("Exchange present" if "Exchange" in plan else "")
-                )
-            return (
-                joined.groupBy(F.col("l_returnflag").alias("returnflag"))
-                .agg(
-                    F.count(F.lit(1)).alias("n_items"),
-                    money_sum("l_extendedprice").alias("flag_revenue"),
-                    F.sum(F.col("l_orderkey") % 1000000).alias("key_checksum"),
-                )
-                .localCheckpoint(eager=True)
+            write_bucketed(
+                li, t_li, ["l_orderkey"], n_buckets=16,
+                sort_cols=["l_orderkey"], path=f"{root}/li",
             )
+            write_bucketed(
+                orders.withColumnRenamed("o_orderkey", "l_orderkey"),
+                t_ord, ["l_orderkey"], n_buckets=16,
+                sort_cols=["l_orderkey"], path=f"{root}/ord",
+            )
+            no_bcast = {"spark.sql.autoBroadcastJoinThreshold": "-1"}
+            with scoped_conf(spark, no_bcast):
+                joined = spark.table(t_li).join(spark.table(t_ord), "l_orderkey")
+                plan = joined._jdf.queryExecution().executedPlan().toString()
+                smj, exchange = "SortMergeJoin" in plan, "Exchange" in plan
+                if not smj or exchange:
+                    raise AssertionError(
+                        "bucketed join not co-located: "
+                        + ("" if smj else "missing SortMergeJoin; ")
+                        + ("Exchange present" if exchange else "")
+                    )
+                return (
+                    joined.groupBy(F.col("l_returnflag").alias("returnflag"))
+                    .agg(
+                        F.count(F.lit(1)).alias("n_items"),
+                        money_sum("l_extendedprice").alias("flag_revenue"),
+                        F.sum(F.col("l_orderkey") % 1000000).alias("key_checksum"),
+                    )
+                    .localCheckpoint(eager=True)
+                )
         finally:
-            spark.conf.set(
-                "spark.sql.autoBroadcastJoinThreshold", prev_bcast
-            )
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {t_li}")
-        spark.sql(f"DROP TABLE IF EXISTS {t_ord}")
-        shutil.rmtree(root, ignore_errors=True)
+            spark.sql(f"DROP TABLE IF EXISTS {t_li}")
+            spark.sql(f"DROP TABLE IF EXISTS {t_ord}")
 
 
 @register(
@@ -2681,7 +2665,6 @@ def q_streaming_file_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     (exactly-once needs the posting layout's overwrite-by-batch or
     Delta) — the availableNow drain here has no retries and the
     full-rebuild equality plus the oracle hash prove the end state."""
-    import shutil
     import tempfile
 
     from ecommerce_data_pipeline_spark.operators.fileindex import (
@@ -2691,11 +2674,13 @@ def q_streaming_file_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     orders = load_table(spark, sf_dir, "orders")
-    root = tempfile.mkdtemp(prefix="stream_fidx_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     state: dict = {"index": None}
-    try:
+    with (
+        tempfile.TemporaryDirectory(
+            prefix="stream_fidx_", ignore_cleanup_errors=True
+        ) as root,
+        scoped_conf(spark, {"spark.sql.shuffle.partitions": "8"}),
+    ):
         src, out, ck = f"{root}/src", f"{root}/lake", f"{root}/ckpt"
         # Range-clustered arrival: each staged file covers a tight
         # o_totalprice band (the ingest-ordered analogue — a time-keyed
@@ -2764,9 +2749,6 @@ def q_streaming_file_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(root, ignore_errors=True)
 
 
 @register(
@@ -2805,7 +2787,6 @@ def q_file_index_append_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     default — ``skipping_scan`` takes the index PATH directly (exercised
     here), and the in-memory union ``streaming_file_index`` certifies is
     the process-local twin for tests and one-shot jobs."""
-    import shutil
     import tempfile
 
     from ecommerce_data_pipeline_spark.operators.fileindex import (
@@ -2817,11 +2798,13 @@ def q_file_index_append_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     orders = load_table(spark, sf_dir, "orders")
-    root = tempfile.mkdtemp(prefix="fidx_append_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     state = {"batches": 0, "compact_plan": None}
-    try:
+    with (
+        tempfile.TemporaryDirectory(
+            prefix="fidx_append_", ignore_cleanup_errors=True
+        ) as root,
+        scoped_conf(spark, {"spark.sql.shuffle.partitions": "8"}),
+    ):
         src, out, ck = f"{root}/src", f"{root}/lake", f"{root}/ckpt"
         idx_path = f"{root}/index"
         # Range-clustered arrival (see streaming_file_index): clustering
@@ -2898,9 +2881,6 @@ def q_file_index_append_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(root, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -3130,7 +3110,6 @@ def q_zorder_multiband_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     index-only measurement (file-count-bounded metadata, no data scan) —
     only the 2-band survivor list reads data, with the predicate still
     pushed for row-group skipping below."""
-    import shutil
     import tempfile
 
     from ecommerce_data_pipeline_spark.operators.fileindex import (
@@ -3145,8 +3124,9 @@ def q_zorder_multiband_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     price_band = (100000.0, 150000.0)
     ck_band = (1, ck_hi)
-    root = tempfile.mkdtemp(prefix="zorder2d_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="zorder2d_", ignore_cleanup_errors=True
+    ) as root:
         path = f"{root}/orders"
         zorder(
             orders, ["o_totalprice", "o_custkey"], bits=5, n_files=32
@@ -3179,8 +3159,6 @@ def q_zorder_multiband_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -3215,7 +3193,6 @@ def q_small_files_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     listing) and the rewrite is one shuffle of exactly the data being
     compacted — the same cost Delta's OPTIMIZE pays."""
     import math
-    import shutil
     import tempfile
 
     from ecommerce_data_pipeline_spark.operators.layout import (
@@ -3227,8 +3204,9 @@ def q_small_files_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
-    root = tempfile.mkdtemp(prefix="compact_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="compact_", ignore_cleanup_errors=True
+    ) as root:
         src, out = f"{root}/small", f"{root}/compacted"
         ev.repartition(64).write.mode("overwrite").parquet(src)
         sizes = file_sizes(spark, src)
@@ -3255,8 +3233,6 @@ def q_small_files_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 @register(
@@ -3286,7 +3262,6 @@ def q_partitioned_retention_delete(spark: SparkSession, sf_dir: str) -> DataFram
     here against the row-level filter oracle. In-query guards require
     all three classes to be non-empty so a degenerate cutoff can't pass
     the certification."""
-    import shutil
     import tempfile
 
     from ecommerce_data_pipeline_spark.operators.layout import (
@@ -3296,8 +3271,9 @@ def q_partitioned_retention_delete(spark: SparkSession, sf_dir: str) -> DataFram
 
     cutoff = "1998-03-15 00:00:00"
     orders = load_table(spark, sf_dir, "orders")
-    root = tempfile.mkdtemp(prefix="retention_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="retention_", ignore_cleanup_errors=True
+    ) as root:
         path = f"{root}/orders"
         orders.withColumn(
             "p", F.date_format("o_orderdate", "yyyy-MM")
@@ -3336,8 +3312,6 @@ def q_partitioned_retention_delete(spark: SparkSession, sf_dir: str) -> DataFram
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 @register(
@@ -3373,7 +3347,6 @@ def q_retention_inflight_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero-age vacuum then sweeps the orphaned generations and superseded
     manifest, after which the current read still hash-matches the
     row-level DELETE-WHERE oracle."""
-    import shutil
     import tempfile
 
     from ecommerce_data_pipeline_spark.operators.layout import (
@@ -3386,8 +3359,6 @@ def q_retention_inflight_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cutoff = "1998-03-15 00:00:00"
     orders = load_table(spark, sf_dir, "orders")
-    root = tempfile.mkdtemp(prefix="retention_mf_")
-
     def checksum(df: DataFrame) -> tuple:
         r = df.agg(
             F.count(F.lit(1)).alias("n"),
@@ -3398,7 +3369,9 @@ def q_retention_inflight_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).first()
         return (r["n"], r["cents"], r["keys"])
 
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="retention_mf_", ignore_cleanup_errors=True
+    ) as root:
         path = f"{root}/orders"
         init_versioned_table(
             spark,
@@ -3446,8 +3419,6 @@ def q_retention_inflight_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 @register(
@@ -3494,7 +3465,6 @@ def q_compaction_inflight_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewrite is one shuffle of exactly that partition's data and the
     commit cost is one JSON rename — Delta OPTIMIZE's shape without
     the log dependency."""
-    import shutil
     import tempfile
 
     from ecommerce_data_pipeline_spark.operators.fileindex import (
@@ -3513,8 +3483,6 @@ def q_compaction_inflight_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
-    root = tempfile.mkdtemp(prefix="compact_mf_")
-
     def checksum(df: DataFrame) -> tuple:
         r = df.agg(
             F.count(F.lit(1)).alias("n"),
@@ -3523,7 +3491,9 @@ def q_compaction_inflight_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).first()
         return (r["n"], r["cents"], r["ids"])
 
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="compact_mf_", ignore_cleanup_errors=True
+    ) as root:
         path = f"{root}/events"
         # 16-way fragmented write: partitionBy splits each input
         # partition per value, so every partition dir lands ~16 files.
@@ -3614,8 +3584,6 @@ def q_compaction_inflight_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -3657,9 +3625,8 @@ def q_cbo_stats_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim — between the no-stats estimate's ~3.8 B/row and the post-stats
     ~1.6 B/row) so the contrast certifies at every sf; all session confs
     are save/restored (the r13 conf-leak discipline). Tables are
-    EXTERNAL into a tempdir (catalog holds metadata only) — dropped +
-    rmtree'd in finally."""
-    import shutil
+    EXTERNAL into a tempdir (catalog holds metadata only) — dropped in
+    finally, before the tempdir is removed."""
     import tempfile
 
     fact_src = load_table(spark, sf_dir, "lineitem").select(
@@ -3668,60 +3635,60 @@ def q_cbo_stats_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim_src = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    root = tempfile.mkdtemp(prefix="cbo_")
-    prev_thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    prev_cbo = spark.conf.get("spark.sql.cbo.enabled", "false")
     t_fact, t_dim = "cbo_fact", "cbo_dim"
-    try:
-        spark.sql(f"DROP TABLE IF EXISTS {t_fact}")
-        spark.sql(f"DROP TABLE IF EXISTS {t_dim}")
-        fact_src.write.mode("overwrite").option(
-            "path", f"{root}/fact"
-        ).saveAsTable(t_fact)
-        dim_src.write.mode("overwrite").option(
-            "path", f"{root}/dim"
-        ).saveAsTable(t_dim)
-        n_dim = spark.table(t_dim).count()
-        spark.conf.set(
-            "spark.sql.autoBroadcastJoinThreshold", str(int(2.5 * n_dim))
-        )
-        q = f"""SELECT f.l_returnflag AS returnflag, count(*) AS n_items,
-          CAST(sum(CAST(round(f.l_extendedprice * 100) AS BIGINT)) / 100.0
-            AS DOUBLE) AS big_revenue,
-          CAST(sum(d.o_orderkey % 1000000) AS BIGINT) AS key_checksum
-        FROM {t_fact} f JOIN {t_dim} d ON f.l_orderkey = d.o_orderkey
-        WHERE d.o_totalprice >= 450000
-        GROUP BY 1"""
+    with tempfile.TemporaryDirectory(
+        prefix="cbo_", ignore_cleanup_errors=True
+    ) as root:
+        try:
+            spark.sql(f"DROP TABLE IF EXISTS {t_fact}")
+            spark.sql(f"DROP TABLE IF EXISTS {t_dim}")
+            fact_src.write.mode("overwrite").option(
+                "path", f"{root}/fact"
+            ).saveAsTable(t_fact)
+            dim_src.write.mode("overwrite").option(
+                "path", f"{root}/dim"
+            ).saveAsTable(t_dim)
+            n_dim = spark.table(t_dim).count()
+            q = f"""SELECT f.l_returnflag AS returnflag, count(*) AS n_items,
+              CAST(sum(CAST(round(f.l_extendedprice * 100) AS BIGINT)) / 100.0
+                AS DOUBLE) AS big_revenue,
+              CAST(sum(d.o_orderkey % 1000000) AS BIGINT) AS key_checksum
+            FROM {t_fact} f JOIN {t_dim} d ON f.l_orderkey = d.o_orderkey
+            WHERE d.o_totalprice >= 450000
+            GROUP BY 1"""
 
-        def initial_plan() -> str:
-            return spark.sql(q)._jdf.queryExecution().sparkPlan().toString()
+            def initial_plan() -> str:
+                return spark.sql(q)._jdf.queryExecution().sparkPlan().toString()
 
-        spark.conf.set("spark.sql.cbo.enabled", "false")
-        p0 = initial_plan()
-        if "BroadcastHashJoin" in p0 or "SortMergeJoin" not in p0:
-            raise AssertionError(
-                "without stats the initial plan should be a SortMergeJoin "
-                "(dim estimate above threshold); got:\n" + p0[:800]
-            )
-        spark.sql(
-            f"ANALYZE TABLE {t_dim} COMPUTE STATISTICS "
-            "FOR COLUMNS o_totalprice, o_orderkey"
-        )
-        spark.sql(f"ANALYZE TABLE {t_fact} COMPUTE STATISTICS")
-        spark.conf.set("spark.sql.cbo.enabled", "true")
-        p1 = initial_plan()
-        if "BroadcastHashJoin" not in p1:
-            raise AssertionError(
-                "with CBO + column stats the filtered dim estimate should "
-                "plan a static broadcast; got:\n" + p1[:800]
-            )
-        return spark.sql(q).localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_thr)
-        spark.conf.set("spark.sql.cbo.enabled", prev_cbo)
-        spark.sql(f"DROP TABLE IF EXISTS {t_fact}")
-        spark.sql(f"DROP TABLE IF EXISTS {t_dim}")
-        shutil.rmtree(root, ignore_errors=True)
+            with scoped_conf(
+                spark,
+                {
+                    "spark.sql.autoBroadcastJoinThreshold": str(int(2.5 * n_dim)),
+                    "spark.sql.cbo.enabled": "false",
+                },
+            ):
+                p0 = initial_plan()
+                if "BroadcastHashJoin" in p0 or "SortMergeJoin" not in p0:
+                    raise AssertionError(
+                        "without stats the initial plan should be a SortMergeJoin "
+                        "(dim estimate above threshold); got:\n" + p0[:800]
+                    )
+                spark.sql(
+                    f"ANALYZE TABLE {t_dim} COMPUTE STATISTICS "
+                    "FOR COLUMNS o_totalprice, o_orderkey"
+                )
+                spark.sql(f"ANALYZE TABLE {t_fact} COMPUTE STATISTICS")
+                spark.conf.set("spark.sql.cbo.enabled", "true")
+                p1 = initial_plan()
+                if "BroadcastHashJoin" not in p1:
+                    raise AssertionError(
+                        "with CBO + column stats the filtered dim estimate should "
+                        "plan a static broadcast; got:\n" + p1[:800]
+                    )
+                return spark.sql(q).localCheckpoint(eager=True)
+        finally:
+            spark.sql(f"DROP TABLE IF EXISTS {t_fact}")
+            spark.sql(f"DROP TABLE IF EXISTS {t_dim}")
 
 
 # ---------------------------------------------------------------------------
@@ -3756,7 +3723,6 @@ def q_incremental_zorder_maintenance(spark: SparkSession, sf_dir: str) -> DataFr
     the maintained layout still SKIPS: a band scan through the refreshed
     stats index reads strictly fewer files than the table holds. Result
     certified row-identical to the plain band scan of the original."""
-    import shutil
     import tempfile
 
     from ecommerce_data_pipeline_spark.operators.fileindex import (
@@ -3769,8 +3735,9 @@ def q_incremental_zorder_maintenance(spark: SparkSession, sf_dir: str) -> DataFr
     orders = load_table(spark, sf_dir, "orders")
     base_rows = orders.filter(F.col("o_orderkey") % 5 != 0)
     fresh_rows = orders.filter(F.col("o_orderkey") % 5 == 0)
-    root = tempfile.mkdtemp(prefix="inc_zorder_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="inc_zorder_", ignore_cleanup_errors=True
+    ) as root:
         path = f"{root}/orders"
         # Bulk: Z-ordered base layout (the expensive full OPTIMIZE, paid
         # once historically).
@@ -3838,5 +3805,3 @@ def q_incremental_zorder_maintenance(spark: SparkSession, sf_dir: str) -> DataFr
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)

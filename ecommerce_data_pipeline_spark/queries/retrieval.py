@@ -29,6 +29,7 @@ from ecommerce_data_pipeline_spark.operators.service import (
     cart_totals,
     inventory_counters,
 )
+from ecommerce_data_pipeline_spark.session import run_independent
 from ecommerce_data_pipeline_spark.sources.events import (
     orders_events,
     payments_events,
@@ -1007,7 +1008,6 @@ def q_streaming_ann_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same kmeans_fit sample-cap parity constraint as ann_recall_report
     (tests/test_round9_new.py pins every certified fixture below the cap).
     Output: (vec_id, cell) for every newly ingested vector."""
-    import shutil
     import tempfile
 
     from ecommerce_data_pipeline_spark.operators.postings import (
@@ -1022,8 +1022,9 @@ def q_streaming_ann_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     existing = emb.filter(F.col("vec_id") % 4 != 0)
     new = emb.filter(F.col("vec_id") % 4 == 0)
     centroids = kmeans_fit(existing, k=8, iters=3)
-    root = tempfile.mkdtemp(prefix="stream_annassign_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="stream_annassign_", ignore_cleanup_errors=True
+    ) as root:
         src, out, ck = f"{root}/src", f"{root}/postings", f"{root}/ckpt"
         new.repartition(4).write.mode("overwrite").parquet(src)
         schema = spark.read.parquet(src).schema
@@ -1055,8 +1056,6 @@ def q_streaming_ann_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("vec_id", F.col("cell").cast("int").alias("cell"))
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def _ann_postings_compaction_oracle_sql(
@@ -1092,7 +1091,6 @@ def q_ann_postings_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     (~8640 × n_cells tiny files otherwise); the rewrite reads only the
     snapshot batch dirs (partition-pruned) and shuffles each cell to one
     task, so cost is one pass over the postings, never the vectors."""
-    import shutil
     import tempfile
 
     from ecommerce_data_pipeline_spark.operators.postings import (
@@ -1107,8 +1105,9 @@ def q_ann_postings_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     centroids = kmeans_fit(emb, k=8, iters=3)
     assigned = assign_cells(emb, centroids).select("vec_id", "cell")
-    root = tempfile.mkdtemp(prefix="ann_compact_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="ann_compact_", ignore_cleanup_errors=True
+    ) as root:
         out = f"{root}/postings"
         for i in range(4):
             write_posting_batch(
@@ -1128,8 +1127,6 @@ def q_ann_postings_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 _POSTINGS_VACUUM_READ_ORACLE = """
@@ -1161,7 +1158,6 @@ def q_postings_vacuum_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     OPTIMIZE+VACUUM where the log exists). The reader pays one manifest
     listing per snapshot — O(compact dirs), driver-side metadata — and
     cell-filter pushdown still prunes partition directories."""
-    import shutil
     import tempfile
 
     from ecommerce_data_pipeline_spark.operators.postings import (
@@ -1178,8 +1174,9 @@ def q_postings_vacuum_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", F.expr("CAST((vec_id DIV 4) % 8 AS INT)").alias("cell")
     )
     n_total = assigned.count()
-    root = tempfile.mkdtemp(prefix="postings_vacuum_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="postings_vacuum_", ignore_cleanup_errors=True
+    ) as root:
         out = f"{root}/postings"
         # The four micro-batch dirs are independent — pooled writes
         # (guide §2.6, r17); the lifecycle sequence (writes → compact →
@@ -1219,8 +1216,6 @@ def q_postings_vacuum_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 @register("postings_delete_after_retain", oracle=_POSTINGS_VACUUM_READ_ORACLE)
@@ -1249,7 +1244,6 @@ def q_postings_delete_after_retain(spark: SparkSession, sf_dir: str) -> DataFram
     (retention-window OPTIMIZE while probes scan, then a maintenance
     window delete-mode rewrite); the closure manifest is O(compact-chain
     length) driver-side metadata, never data."""
-    import shutil
     import tempfile
 
     from ecommerce_data_pipeline_spark.operators.postings import (
@@ -1269,8 +1263,9 @@ def q_postings_delete_after_retain(spark: SparkSession, sf_dir: str) -> DataFram
         F.count(F.when(F.col("vec_id") % 6 < 4, 1)).alias("w1"),
     ).first()
     n_total, n_wave1 = int(_tot["n"]), int(_tot["w1"])
-    root = tempfile.mkdtemp(prefix="postings_del_ret_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="postings_del_ret_", ignore_cleanup_errors=True
+    ) as root:
         out = f"{root}/postings"
         # Wave-1's four micro-batch dirs are independent — pooled writes
         # (guide §2.6, r17); wave ordering (4 writes → retained
@@ -1318,8 +1313,6 @@ def q_postings_delete_after_retain(spark: SparkSession, sf_dir: str) -> DataFram
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def _streaming_postings_lifecycle_oracle_sql(
@@ -1378,7 +1371,6 @@ def q_streaming_postings_lifecycle(spark: SparkSession, sf_dir: str) -> DataFram
     consolidates snapshots without pausing ingestion, and readers never
     see a torn layout (rename publishes data + consumed-inputs manifest
     atomically; operators/postings.py)."""
-    import shutil
     import tempfile
 
     from ecommerce_data_pipeline_spark.operators.postings import (
@@ -1401,21 +1393,17 @@ def q_streaming_postings_lifecycle(spark: SparkSession, sf_dir: str) -> DataFram
         F.count(F.when(F.col("vec_id") % 8 == 0, 1)).alias("n_w1"),
     ).first()
     n_wave1, n_new = int(_n["n_w1"]), int(_n["n_new"])
-    root = tempfile.mkdtemp(prefix="postings_lifecycle_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="postings_lifecycle_", ignore_cleanup_errors=True
+    ) as root:
         src, out, ck = f"{root}/src", f"{root}/postings", f"{root}/ckpt"
         # The k-means fit collect (existing split) and the wave-1 source
         # staging write (new split) are independent jobs — overlap them
         # (guide §2.6, r17).
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as _pool:
-            _fc = _pool.submit(kmeans_fit, existing, 8, 3)
-            _fw = _pool.submit(
-                wave1.repartition(4).write.mode("overwrite").parquet, src
-            )
-            centroids = _fc.result()
-            _fw.result()
+        centroids, _ = run_independent(
+            lambda: kmeans_fit(existing, 8, 3),
+            lambda: wave1.repartition(4).write.mode("overwrite").parquet(src),
+        )
         schema = spark.read.parquet(src).schema
 
         def assign_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -1468,8 +1456,6 @@ def q_streaming_postings_lifecycle(spark: SparkSession, sf_dir: str) -> DataFram
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def _ivf_postings_probe_oracle_sql(
@@ -1531,7 +1517,6 @@ def q_ivf_postings_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     The probed-cell set is k_cells-bounded (≤8 here) — the one driver
     round-trip, same k-bounded collect discipline as the registry's other
     audited collects."""
-    import shutil
     import tempfile
 
     from ecommerce_data_pipeline_spark.operators.postings import (
@@ -1549,8 +1534,9 @@ def q_ivf_postings_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = emb.filter(F.col("vec_id") % 50 == 0)
     centroids = kmeans_fit(emb, k=8, iters=3)
     assigned = assign_cells(emb, centroids)  # (vec_id, v, cell)
-    root = tempfile.mkdtemp(prefix="ivf_postings_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="ivf_postings_", ignore_cleanup_errors=True
+    ) as root:
         out = f"{root}/postings"
         for b in range(2):
             write_posting_batch(
@@ -1575,8 +1561,6 @@ def q_ivf_postings_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         return topk_within_cells(corpus, probed, k=5).localCheckpoint(
             eager=True
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def _eval_contamination_ivf_oracle_sql(
@@ -2925,7 +2909,6 @@ def q_postings_inflight_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot readers never reference reclaimable files, so retention only
     has to outlive RAW readers (the contrapositive is pinned by
     test_inflight_raw_reader_is_why_retention_exists)."""
-    import shutil
     import tempfile
 
     from ecommerce_data_pipeline_spark.operators.postings import (
@@ -2939,8 +2922,9 @@ def q_postings_inflight_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned = emb.select(
         "vec_id", F.expr("CAST((vec_id DIV 4) % 8 AS INT)").alias("cell")
     )
-    root = tempfile.mkdtemp(prefix="postings_inflight_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="postings_inflight_", ignore_cleanup_errors=True
+    ) as root:
         out = f"{root}/postings"
         # Independent micro-batch dirs — pooled writes (guide §2.6, r17).
         write_posting_batches(
@@ -2976,5 +2960,3 @@ def q_postings_inflight_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)

@@ -36,6 +36,7 @@ from ecommerce_data_pipeline_spark.sources.events import (
     silver_orders_frame,
     silver_payments_frame,
 )
+from ecommerce_data_pipeline_spark.session import run_independent, scoped_conf
 from ecommerce_data_pipeline_spark.sources.parquet import load_table, register_views
 from ecommerce_data_pipeline_spark.streaming.statestore import rocksdb_state
 
@@ -62,6 +63,14 @@ from ecommerce_data_pipeline_spark.queries.medallion import PAY_SQL
 # (checkpoint setup + N availableNow batches), not compute — bench.py
 # reports this split so the streaming tax is not read as operator cost.
 STREAMING_PHASES: dict[str, float] = {}
+
+# Stateful operators latch their state-store partition count from the
+# session conf at stream START; 32-64 state-store partitions for a
+# fixture-sized key space is pure per-batch setup churn. Sizing state
+# partitions to key cardinality is standard stateful-streaming tuning (it
+# also makes a State Data Source read 8 tasks); the stateful queries below
+# scope it around their run and restore it after.
+_STATE_PARTITIONS = {"spark.sql.shuffle.partitions": "8"}
 
 
 @register(
@@ -94,25 +103,19 @@ def q_streaming_fct_sales_minute(spark: SparkSession, sf_dir: str) -> DataFrame:
         stage_event_files,
     )
 
-    import shutil
-
-    root = tempfile.mkdtemp(prefix="stream_fct_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="stream_fct_", ignore_cleanup_errors=True
+    ) as root:
         t0 = time.time()
         o_src, p_src = f"{root}/src/orders", f"{root}/src/payments"
-        # The two topic stagings are independent fixture writes — run
-        # them from a 2-thread pool so the second write's tasks back-fill
-        # executors freed by the first's tail (guide §2.6, r17).
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as _pool:
-            _fo = _pool.submit(
-                stage_event_files, spark, orders_events(spark, sf_dir), o_src
-            )
-            _fp = _pool.submit(
-                stage_event_files, spark, payments_events(spark, sf_dir), p_src
-            )
-            o_schema, p_schema = _fo.result(), _fp.result()
+        # The two topic stagings are independent fixture writes — overlap
+        # them so the second write's tasks back-fill executors freed by the
+        # first's tail (r17).
+        o_ev, p_ev = orders_events(spark, sf_dir), payments_events(spark, sf_dir)
+        o_schema, p_schema = run_independent(
+            lambda: stage_event_files(spark, o_ev, o_src),
+            lambda: stage_event_files(spark, p_ev, p_src),
+        )
         STREAMING_PHASES["stage_fixture_files_sec"] = round(time.time() - t0, 3)
         # Unpartitioned silver: the fixture's order dates scatter uniformly
         # over ~7 years, so date-partitioned micro-batch merges would rewrite
@@ -139,8 +142,6 @@ def q_streaming_fct_sales_minute(spark: SparkSession, sf_dir: str) -> DataFrame:
             .drop("processed_ts")
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 @register(
@@ -438,7 +439,6 @@ def q_streaming_replay_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrival order — production sizes it to the real delivery lag, which
     bounds the id state instead of keeping it all.
     """
-    import shutil
     import tempfile
 
     ev = load_table(spark, sf_dir, "events").filter(F.col("user_id") % 5 == 0)
@@ -451,14 +451,12 @@ def q_streaming_replay_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "value",
     )
-    root = tempfile.mkdtemp(prefix="stream_dedup_")
-    # Stateful operators pin their partition count from the session conf at
-    # stream start; 32-64 state-store partitions for a fixture-sized id
-    # space is pure per-batch setup churn. Sizing state partitions to key
-    # cardinality is standard stateful-streaming tuning; restored after.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with (
+        tempfile.TemporaryDirectory(
+            prefix="stream_dedup_", ignore_cleanup_errors=True
+        ) as root,
+        scoped_conf(spark, _STATE_PARTITIONS),
+    ):
         src, out, ck = f"{root}/src", f"{root}/out", f"{root}/ckpt"
         slice_df.repartition(4).write.mode("overwrite").parquet(src)
         # Replay: a subset of the stream arrives again as new files.
@@ -492,9 +490,6 @@ def q_streaming_replay_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def _register_streaming_media_decode() -> None:
@@ -516,7 +511,6 @@ def _register_streaming_media_decode() -> None:
         features), and the oracle proves the streaming execution is
         feature-identical to the batch decode. Stateless: per-batch work
         is pure projection, no state store."""
-        import shutil
         import tempfile
 
         from ecommerce_data_pipeline_spark.operators.multimodal import (
@@ -525,8 +519,9 @@ def _register_streaming_media_decode() -> None:
         )
 
         media = synth_image_corpus(load_table(spark, sf_dir, "documents"))
-        root = tempfile.mkdtemp(prefix="stream_media_")
-        try:
+        with tempfile.TemporaryDirectory(
+            prefix="stream_media_", ignore_cleanup_errors=True
+        ) as root:
             src, out, ck = f"{root}/src", f"{root}/out", f"{root}/ckpt"
             media.repartition(4).write.mode("overwrite").parquet(src)
             schema = spark.read.parquet(src).schema
@@ -545,8 +540,6 @@ def _register_streaming_media_decode() -> None:
             )
             q.awaitTermination()
             return spark.read.parquet(out).localCheckpoint(eager=True)
-        finally:
-            shutil.rmtree(root, ignore_errors=True)
 
 
 _register_streaming_media_decode()
@@ -579,7 +572,6 @@ def q_stream_stream_attribution_join(spark: SparkSession, sf_dir: str) -> DataFr
     Here the watermark spans the whole fixture (drain-everything test
     shape); production sizes it to the delivery lag. Oracle = the batch
     interval join — streamed and batch answers must be identical."""
-    import shutil
     import tempfile
 
     ev = (
@@ -592,10 +584,12 @@ def q_stream_stream_attribution_join(spark: SparkSession, sf_dir: str) -> DataFr
             "event_type",
         )
     )
-    root = tempfile.mkdtemp(prefix="stream_ssj_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with (
+        tempfile.TemporaryDirectory(
+            prefix="stream_ssj_", ignore_cleanup_errors=True
+        ) as root,
+        scoped_conf(spark, _STATE_PARTITIONS),
+    ):
         p_src, v_src = f"{root}/purchases", f"{root}/views"
         out, ck = f"{root}/out", f"{root}/ckpt"
         # Staged sequentially on purpose: an r17 attempt pooled these two
@@ -660,9 +654,6 @@ def q_stream_stream_attribution_join(spark: SparkSession, sf_dir: str) -> DataFr
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(root, ignore_errors=True)
 
 
 @register(
@@ -707,7 +698,6 @@ def q_streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     advances the watermark by itself; the 1 s delay here is fixture-sized
     where production sizes it to delivery lag."""
     import os
-    import shutil
     import tempfile
 
     ev = (
@@ -717,10 +707,12 @@ def q_streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             "user_id", F.col("ts").cast("timestamp_ltz").alias("ts"), "value"
         )
     )
-    root = tempfile.mkdtemp(prefix="stream_sess_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with (
+        tempfile.TemporaryDirectory(
+            prefix="stream_sess_", ignore_cleanup_errors=True
+        ) as root,
+        scoped_conf(spark, _STATE_PARTITIONS),
+    ):
         src, out, ck = f"{root}/src", f"{root}/out", f"{root}/ckpt"
         ev.repartition(4).write.mode("overwrite").parquet(src)
         # One-scalar driver read (same class as the A4 incremental bound).
@@ -775,9 +767,6 @@ def q_streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def _register_streaming_incremental_dedup() -> None:
@@ -818,15 +807,15 @@ def _register_streaming_incremental_dedup() -> None:
         Reference analogue: the consumers' upsert-by-key idempotent
         ingest contract (docs/events.md:145-150), lifted from single-row
         keys to content identity."""
-        import shutil
         import tempfile
         import time
 
         docs = load_table(spark, sf_dir, "documents")
         new = docs.filter(F.col("doc_id") % 5 == 0)
         existing = docs.filter(F.col("doc_id") % 5 != 0)
-        root = tempfile.mkdtemp(prefix="stream_incdedup_")
-        try:
+        with tempfile.TemporaryDirectory(
+            prefix="stream_incdedup_", ignore_cleanup_errors=True
+        ) as root:
             t0 = time.time()
             art = f"{root}/artifact"
             src, out, ck = f"{root}/src", f"{root}/out", f"{root}/ckpt"
@@ -839,26 +828,15 @@ def _register_streaming_incremental_dedup() -> None:
             # IN ITS THREAD so the shared minhash-profile checkpoint is
             # materialized exactly once, then buckets reads it from the
             # block manager (bucket rows derive from the profile).
-            from concurrent.futures import ThreadPoolExecutor
-
             def _shingles_then_buckets() -> None:
                 prof_t.write.mode("overwrite").parquet(f"{art}/shingles")
                 banded_t.write.mode("overwrite").parquet(f"{art}/buckets")
 
-            with ThreadPoolExecutor(max_workers=3) as pool:
-                futs = [
-                    pool.submit(
-                        exact_t.write.mode("overwrite").parquet,
-                        f"{art}/exact",
-                    ),
-                    pool.submit(_shingles_then_buckets),
-                    pool.submit(
-                        new.repartition(4).write.mode("overwrite").parquet,
-                        src,
-                    ),
-                ]
-                for f in futs:
-                    f.result()
+            run_independent(
+                lambda: exact_t.write.mode("overwrite").parquet(f"{art}/exact"),
+                _shingles_then_buckets,
+                lambda: new.repartition(4).write.mode("overwrite").parquet(src),
+            )
             STREAMING_PHASES["incdedup_artifact_build_sec"] = round(
                 time.time() - t0, 3
             )
@@ -909,8 +887,6 @@ def _register_streaming_incremental_dedup() -> None:
             )
             STREAMING_PHASES["incdedup_drain_sec"] = round(time.time() - t0, 3)
             return result
-        finally:
-            shutil.rmtree(root, ignore_errors=True)
 
 
 _register_streaming_incremental_dedup()
@@ -946,16 +922,17 @@ def q_streaming_trending_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     flushed by the far-future-sentinel pattern of
     streaming_session_windows, then ranked top-3 per window on read."""
     import os
-    import shutil
     import tempfile
 
     ev = load_table(spark, sf_dir, "events").select(
         F.col("ts").cast("timestamp_ltz").alias("ts"), "event_type"
     )
-    root = tempfile.mkdtemp(prefix="stream_trend_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with (
+        tempfile.TemporaryDirectory(
+            prefix="stream_trend_", ignore_cleanup_errors=True
+        ) as root,
+        scoped_conf(spark, _STATE_PARTITIONS),
+    ):
         src, out, ck = f"{root}/src", f"{root}/out", f"{root}/ckpt"
         ev.repartition(4).write.mode("overwrite").parquet(src)
         sentinel = ev.agg(
@@ -1006,9 +983,6 @@ def q_streaming_trending_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("rank") <= 3)
             .localCheckpoint(eager=True)
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def _register_streaming_trending_topk_merge() -> None:
@@ -1043,7 +1017,6 @@ def _register_streaming_trending_topk_merge() -> None:
         batches touch ~1) or be Delta tables whose MERGE prunes by key;
         the unpartitioned fixture tables keep the tiny test honest.
         """
-        import shutil
         import tempfile
 
         from ecommerce_data_pipeline_spark.lake import ParquetTable
@@ -1051,10 +1024,12 @@ def _register_streaming_trending_topk_merge() -> None:
         ev = load_table(spark, sf_dir, "events").select(
             F.col("ts").cast("timestamp_ltz").alias("ts"), "event_type"
         )
-        root = tempfile.mkdtemp(prefix="stream_trend_merge_")
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
+        with (
+            tempfile.TemporaryDirectory(
+                prefix="stream_trend_merge_", ignore_cleanup_errors=True
+            ) as root,
+            scoped_conf(spark, _STATE_PARTITIONS),
+        ):
             src, ck = f"{root}/src", f"{root}/ckpt"
             ev.repartition(4).write.mode("overwrite").parquet(src)
             schema = spark.read.parquet(src).schema
@@ -1109,9 +1084,6 @@ def _register_streaming_trending_topk_merge() -> None:
                 .select("window_start", "event_type", "n_events", "rank")
                 .localCheckpoint(eager=True)
             )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-            shutil.rmtree(root, ignore_errors=True)
 
 
 _register_streaming_trending_topk_merge()
@@ -1153,18 +1125,16 @@ def q_streaming_state_inspect(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's checkpointed streaming jobs — e.g.
     analytics/spark/jobs/bronze_orders_raw.py — expose no comparable
     state introspection; this is a Spark-4-native extension.)"""
-    import shutil
     import tempfile
 
     ev = load_table(spark, sf_dir, "events").filter(F.col("user_id") % 7 == 0)
     slice_df = ev.select("event_id", "event_type")
-    root = tempfile.mkdtemp(prefix="stream_state_")
-    # Stateful ops pin their state-partition count at stream start; 8 is
-    # right-sized for the fixture key space (same tuning note as
-    # streaming_replay_dedup) and makes the state read 8 tasks.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with (
+        tempfile.TemporaryDirectory(
+            prefix="stream_state_", ignore_cleanup_errors=True
+        ) as root,
+        scoped_conf(spark, _STATE_PARTITIONS),
+    ):
         src, out, ck = f"{root}/src", f"{root}/out", f"{root}/ckpt"
         slice_df.repartition(4).write.mode("overwrite").parquet(src)
         schema = spark.read.parquet(src).schema
@@ -1202,6 +1172,3 @@ def q_streaming_state_inspect(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"state/sink divergence: state_keys={n_state} sink={n_sink}"
             )
         return result
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(root, ignore_errors=True)

@@ -37,8 +37,13 @@ Spark 4.1 decisions (audited round 5):
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
+from typing import Callable, Iterator, TypeVar
 
 from pyspark.sql import SparkSession
+
+T = TypeVar("T")
 
 DEFAULT_APP_NAME = "ecommerce-data-pipeline-spark"
 
@@ -121,3 +126,38 @@ def get_spark(
         for k, v in extra_conf.items():
             builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, conf: dict[str, str]) -> Iterator[None]:
+    """Set session ``conf`` for the enclosed block, then put every key back:
+    a key that had a value gets it again, a key that had none is unset. The
+    restore runs when the block raises too."""
+    prev = {k: spark.conf.get(k, None) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def run_independent(*thunks: Callable[[], T]) -> list[T]:
+    """Run independent Spark jobs (staging writes, micro-batch dir writes)
+    side by side from a small thread pool, so one job's tasks back-fill
+    executors freed by another's tail. Returns the results in thunk order and re-raises the
+    first failure in that order (pooled, once every thunk has finished;
+    serially, the later thunks do not run).
+
+    Pool size is ``min(len(thunks), $SPARK_GRAFT_MAINT_POOL or 4)``; a size
+    of 1 runs the thunks serially on the calling thread."""
+    n = min(len(thunks), int(os.environ.get("SPARK_GRAFT_MAINT_POOL") or 4))
+    if n <= 1:
+        return [t() for t in thunks]
+    with ThreadPoolExecutor(max_workers=n) as pool:
+        futures = [pool.submit(t) for t in thunks]
+        return [f.result() for f in futures]

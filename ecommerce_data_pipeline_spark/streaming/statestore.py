@@ -12,10 +12,11 @@ keeps commit cost proportional to the delta, not the store size.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-from typing import Iterator
+from contextlib import AbstractContextManager
 
 from pyspark.sql import SparkSession
+
+from ecommerce_data_pipeline_spark.session import scoped_conf
 
 ROCKSDB = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
@@ -29,20 +30,9 @@ _CONFS = {
 }
 
 
-@contextmanager
-def rocksdb_state(spark: SparkSession) -> Iterator[None]:
+def rocksdb_state(spark: SparkSession) -> AbstractContextManager[None]:
     """Run the enclosed stream with RocksDB-backed state (restores the
     session's previous provider after). The provider is latched per query
     at stream START from the session conf, so the context only needs to
     span `.start()`."""
-    prev = {k: spark.conf.get(k, None) for k in _CONFS}
-    for k, v in _CONFS.items():
-        spark.conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    return scoped_conf(spark, _CONFS)

@@ -722,3 +722,78 @@ def test_merge_evolving_batch_takes_append_path(spark, tmp_path):
         r["k"]: (r["v"], r["source"]) for r in t.read(spark).collect()
     }
     assert got == {"a": (1.0, None), "b": (None, "s3")}
+
+
+def test_parquet_table_rejects_two_partition_columns(tmp_path):
+    """Plain-parquet tables prune merges and deletes with a one-column
+    IN-list, so a composite partition key is refused up front."""
+    with pytest.raises(ValueError, match="one partition column"):
+        ParquetTable(str(tmp_path / "t"), partition_by=["day", "hour"])
+
+
+def test_scoped_conf_restores_set_and_unset_keys(spark):
+    """A key that had a value gets it back, a key that had none is unset
+    again, on a normal exit and when the body raises."""
+    from ecommerce_data_pipeline_spark.session import scoped_conf
+
+    set_key, unset_key = "spark.sql.shuffle.partitions", "spark.graft.test.scoped"
+    before = spark.conf.get(set_key)
+    assert spark.conf.get(unset_key, None) is None
+    conf = {set_key: "3", unset_key: "on"}
+    with scoped_conf(spark, conf):
+        assert spark.conf.get(set_key) == "3"
+        assert spark.conf.get(unset_key) == "on"
+    assert spark.conf.get(set_key) == before
+    assert spark.conf.get(unset_key, None) is None
+    with pytest.raises(RuntimeError, match="body"):
+        with scoped_conf(spark, conf):
+            raise RuntimeError("body")
+    assert spark.conf.get(set_key) == before
+    assert spark.conf.get(unset_key, None) is None
+
+
+def test_run_independent_order_errors_and_serial(monkeypatch):
+    """Results come back in thunk order whatever the finishing order, the
+    first failing thunk's exception is re-raised, and a pool size of 1
+    runs every thunk on the calling thread."""
+    import threading
+    import time
+
+    from ecommerce_data_pipeline_spark.session import run_independent
+
+    def slow(v, delay):
+        def thunk():
+            time.sleep(delay)
+            return v
+
+        return thunk
+
+    monkeypatch.delenv("SPARK_GRAFT_MAINT_POOL", raising=False)
+    thunks = (slow("a", 0.2), slow("b", 0.0), slow("c", 0.1))
+    assert run_independent(*thunks) == ["a", "b", "c"]
+    assert run_independent() == []
+
+    def boom():
+        raise ValueError("boom")
+
+    with pytest.raises(ValueError, match="boom"):
+        run_independent(slow(1, 0.0), boom, slow(3, 0.0))
+
+    monkeypatch.setenv("SPARK_GRAFT_MAINT_POOL", "1")
+    idents = run_independent(*[threading.get_ident for _ in range(3)])
+    assert idents == [threading.get_ident()] * 3
+
+
+def test_drift_pin_counts_bytes_under_a_path_with_a_space(spark, tmp_path):
+    """``inputFiles()`` percent-encodes a space in the fixture path; the
+    drift-pin gate must still size the files instead of counting 0."""
+    from ecommerce_data_pipeline_spark.queries.curation import _local_scan_bytes
+
+    path = tmp_path / "sf dir" / "documents"
+    spark.range(100).write.parquet(str(path))
+    df = spark.read.parquet(str(path))
+    assert any("%20" in f for f in df.inputFiles())
+    on_disk = sum(
+        os.path.getsize(path / f) for f in os.listdir(path) if f.endswith(".parquet")
+    )
+    assert _local_scan_bytes(df) == on_disk > 0

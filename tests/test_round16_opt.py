@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 
-def test_rewrite_versioned_pool_matches_sequential(spark, tmp_path):
+def test_rewrite_versioned_pool_matches_sequential(spark, tmp_path, monkeypatch):
     """The concurrent per-partition rewrite pool (guide §2.6) must be
     invisible in the result: same rewritten/skipped sets, same manifest
     version arithmetic, same rows as the sequential path."""
@@ -31,8 +31,10 @@ def test_rewrite_versioned_pool_matches_sequential(spark, tmp_path):
         # Content-neutral rewrite: same rows, fewer files.
         return d.coalesce(1)
 
-    seq = rewrite_versioned(spark, paths["seq"], halve, max_concurrent=1)
-    par = rewrite_versioned(spark, paths["pool"], halve, max_concurrent=4)
+    monkeypatch.setenv("SPARK_GRAFT_MAINT_POOL", "1")
+    seq = rewrite_versioned(spark, paths["seq"], halve)
+    monkeypatch.setenv("SPARK_GRAFT_MAINT_POOL", "4")
+    par = rewrite_versioned(spark, paths["pool"], halve)
     assert seq["rewritten"] == par["rewritten"] == [f"g{i}" for i in range(5)]
     assert seq["skipped"] == par["skipped"] == []
     assert seq["version"] == par["version"]
@@ -53,7 +55,7 @@ def test_rewrite_versioned_pool_matches_sequential(spark, tmp_path):
     )
 
 
-def test_rewrite_versioned_pool_failure_aborts_commit(spark, tmp_path):
+def test_rewrite_versioned_pool_failure_aborts_commit(spark, tmp_path, monkeypatch):
     """A failing partition rewrite must abort the WHOLE commit — the
     manifest stays at version n even when sibling partitions already
     landed their gen dirs (they become vacuum-sweepable orphans, the
@@ -78,8 +80,9 @@ def test_rewrite_versioned_pool_failure_aborts_commit(spark, tmp_path):
             raise RuntimeError("boom")
         return d.coalesce(1)
 
+    monkeypatch.setenv("SPARK_GRAFT_MAINT_POOL", "4")
     with pytest.raises(RuntimeError, match="boom"):
-        rewrite_versioned(spark, path, explode_on_g2, max_concurrent=4)
+        rewrite_versioned(spark, path, explode_on_g2)
     # Manifest untouched; the committed snapshot still reads cleanly.
     assert read_versioned_manifest(spark, path) == (ver0, mapping0)
     assert sorted(r["id"] for r in read_versioned(spark, path).collect()) == before

@@ -1,18 +1,23 @@
-"""Round-16 optimization profiler: time individual registry queries solo.
+"""Optimization profiler: time individual registry queries solo.
 
 Mirrors bench.py's setup (stream/silver/corpus caches warmed, Arrow pool
 forked, codegen JIT'd) so per-query numbers isolate the operator under
 test, then times each named query ``--runs`` times with the noop sink and
-reports min/median. ``--plan TAG`` additionally writes
-``plans/r16/<query>_<TAG>.txt`` with the ``explain("formatted")`` output
-(the before/after evidence files the round's deliverables require).
+reports min/median (plus the streaming phase split for streaming
+queries). ``--plan TAG`` additionally writes ``<OUT>/<query>_<TAG>.txt``
+with the ``explain("formatted")`` output (before/after plan evidence).
 
 Usage:
-    python tools/profile_r16.py [--runs N] [--plan TAG] query [query ...]
+    python tools/profile_queries.py [--runs N] [--plan TAG] [--out plans/<tag>]
+        query [query ...]
+
+(Not ``tools/profile.py``: run as a script, that name would shadow the
+stdlib ``profile`` module, which ``import pyspark`` reaches via cProfile.)
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import statistics
@@ -23,21 +28,13 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> int:
-    args = sys.argv[1:]
-    runs = 3
-    plan_tag = None
-    names: list[str] = []
-    i = 0
-    while i < len(args):
-        if args[i] == "--runs":
-            runs = int(args[i + 1])
-            i += 2
-        elif args[i] == "--plan":
-            plan_tag = args[i + 1]
-            i += 2
-        else:
-            names.append(args[i])
-            i += 1
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--runs", type=int, default=3)
+    ap.add_argument("--plan", dest="plan_tag", metavar="TAG")
+    ap.add_argument("--out", default="plans", help="plan dump dir (--plan)")
+    ap.add_argument("names", nargs="+", metavar="query")
+    args = ap.parse_args()
+    runs, plan_tag, names = args.runs, args.plan_tag, args.names
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -48,7 +45,7 @@ def main() -> int:
     from ecommerce_data_pipeline_spark.sources.parquet import load_table as _lt
     from ecommerce_data_pipeline_spark.operators import dedup as _dd
 
-    spark = get_spark("profile-r16")
+    spark = get_spark("profile")
     spark.sparkContext.setLogLevel("ERROR")
 
     t0 = time.time()
@@ -91,17 +88,23 @@ def main() -> int:
             "min": min(times),
             "median": round(statistics.median(times), 3),
         }
+        from ecommerce_data_pipeline_spark.queries.streaming_q import (
+            STREAMING_PHASES,
+        )
+        if STREAMING_PHASES:
+            out[name]["phases"] = dict(STREAMING_PHASES)
+            STREAMING_PHASES.clear()
         print(
             f"{name}: min={min(times)} runs={times} build={builds}",
             file=sys.stderr,
         )
         if plan_tag:
-            os.makedirs("plans/r16", exist_ok=True)
+            os.makedirs(args.out, exist_ok=True)
             df = fn(spark, sf_dir)
             p = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted"
             )
-            with open(f"plans/r16/{name}_{plan_tag}.txt", "w") as fh:
+            with open(f"{args.out}/{name}_{plan_tag}.txt", "w") as fh:
                 fh.write(p)
 
     print(json.dumps({"setup_sec": setup, "queries": out}))
